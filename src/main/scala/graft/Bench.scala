@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main: one JSON line with total + per-query seconds.
  *
@@ -67,30 +65,7 @@ object Bench {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Deployment sizing, mirrored by every graft main: executors of
-      // this memory class (tens of GiB) can hash-broadcast dimensions
-      // well past Spark's conservative 10 MB default; 32 MB keeps the
-      // sf0.1 node-category dimension (~15 MB cached) on the broadcast
-      // side of the build-time denorm joins instead of shuffling the
-      // 1.3 M-row edge table twice. Operators stay stats-adaptive —
-      // genuinely large sides still shuffle.
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-      // Codegen class cache sized to the WORKLOAD, not Spark's default
-      // 100 entries: a serving process answering 100+ distinct prepared
-      // queries compiles several generated classes per plan, so the
-      // default LRU churns and every repeat RE-COMPILES its generated
-      // code (janino, 50-200 ms for a large filter) — measured r13 as a
-      // consistent 2-3x p50 inflation on the expression-heavy lookups
-      // (g15 0.33 s in the full 108-key run vs 0.18 s benched alone,
-      // identical plans). Static conf — must be set before the first
-      // session. Memory cost is bounded: compiled classes, not data.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // Phase 1 — ingest (one-time per corpus drop, a separate batch job in
@@ -198,18 +173,13 @@ object Bench {
     // ~15 keys x 6 x sub-second = tens of seconds per run. Per-key
     // execution counts ride in the detail JSON ("queries_n_exec") so
     // consumers see the sampling asymmetry vs non-baseline keys
-    // (advice-caught).
-    val baselineKeys = Set(
-      "g03_onehop_fwd", "g04_onehop_rev", "g05_onehop_open",
-      "g06_onehop_pinned", "g07_onehop_multi", "g08_category_hierarchy",
-      "g09_predicate_hierarchy", "g10_symmetric", "g11_canonical_flip",
-      "g13_subclass_expansion", "g14_single_node", "g15_qualified",
-      "g16_attr_constraint", "g18_get_edges", "g19_get_neighbors")
+    // (advice-caught). The keys are the records marked `headline`.
+    val headline = SparkEntry.registry.filter(_.headline).map(_.name).toSet
     val extraRounds =
       math.max(0, 9 - repeats) min (if (repeats >= 1) 6 else 0)
     for (_ <- 0 until extraRounds;
          (name, fn) <- named
-         if baselineKeys.contains(name) && !failed.contains(name)) {
+         if headline.contains(name) && !failed.contains(name)) {
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).count()
@@ -298,31 +268,29 @@ object Bench {
     // abort the run after all queries already completed — the stdout line
     // is the contract, the file is best-effort.
     //
-    // The default path is RUN-STAMPED (cpus + wall clock) rather than a
-    // fixed name: the round-20 driver ran the bench twice per round (32
-    // then 8 cores) and the second run clobbered the first's per-query
-    // detail, leaving PERF_r20.per_query/scaling EMPTY — one noisy total
-    // was the round's only ground truth. A per-run file keyed by the run
-    // itself can never be overwritten; the stdout line carries its exact
-    // path in "detail". (Embedding the 209-key p50 map in the stdout line
+    // The default path is RUN-STAMPED (cpus + wall clock to the
+    // millisecond + a random suffix) rather than a fixed name: the
+    // round-20 driver ran the bench twice per round (32 then 8 cores) and
+    // the second run clobbered the first's per-query detail, leaving
+    // PERF_r20.per_query/scaling EMPTY, and a fixed-name copy written
+    // beside the stamped file emptied PERF_r21.per_query the same way.
+    // Two runs started in the same millisecond still get different
+    // suffixes, and CREATE_NEW refuses to replace an existing file; the
+    // stdout line carries the exact path in "detail". (Embedding the 209-key p50 map in the stdout line
     // instead would blow the driver's 2000-char tail capture and turn the
     // WHOLE line unparseable — measured: the r20 tail is exactly 2000
-    // chars with the ~700-char compact line barely inside it.) The legacy
-    // fixed path is still written for any consumer that hardcodes it.
+    // chars with the ~700-char compact line barely inside it.)
     val detailRef =
       try {
         val stamped = sys.env.get("SPARK_GRAFT_DETAIL").getOrElse {
-          val ts = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss")
+          val ts = new java.text.SimpleDateFormat("yyyyMMdd_HHmmss_SSS")
             .format(new java.util.Date())
-          s"bench_detail_c${cpus}_$ts.json"
+          val rnd = java.util.UUID.randomUUID().toString.take(8)
+          s"bench_detail_c${cpus}_${ts}_$rnd.json"
         }
         val detailPath = java.nio.file.Paths.get(stamped)
-        java.nio.file.Files.write(detailPath, detail.getBytes("UTF-8"))
-        try
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get("bench_detail.json"),
-            detail.getBytes("UTF-8"))
-        catch { case _: Throwable => () }
+        java.nio.file.Files.write(detailPath, detail.getBytes("UTF-8"),
+          java.nio.file.StandardOpenOption.CREATE_NEW)
         jstr(detailPath.toAbsolutePath.toString)
       } catch { case _: Throwable => "null" }
     // The stdout line is COMPACT (r10 advice #4): totals + errors + host

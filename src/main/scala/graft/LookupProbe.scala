@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main for the point-lookup fast path: warms the fixture,
   * then runs the named queries repeatedly, printing per-run wall time and
   * (with "explain") the executed plan's join/exchange/generate skeleton —
@@ -15,19 +13,7 @@ object LookupProbe {
     val repeats = if (args.length > 2) args(2).toInt else 5
     val explain = args.contains("explain")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // serving-config experiments: SPARK_GRAFT_SHUFFLE / SPARK_GRAFT_AQE
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // deployment sizing shared with Bench (see comment there)
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     Fixture.ensureStore(spark, sfDir)
     val g = Fixture.graph(spark, sfDir)

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Diagnostic main (r21): per-key PURITY audit for the pipeline registry.
@@ -12,22 +11,16 @@ import org.apache.spark.sql.SparkSession
  * materialization — i.e. the per-repeat rebuild the bench pays for it is
  * pure driver-side plan assembly that a prepared-statement serving path
  * (the discipline SparkEntry's graph lookups have used since r12) would
- * pay once. Only keys this audit proves pure are eligible for
- * `PipelineEntry.preparedPure`; PreparedPuritySpec pins the proof.
+ * pay once. Only keys this audit proves pure (at most the one schema-
+ * read job) may be declared `Prepared`; PreparedPuritySpec pins the proof.
  *
  * Run: sbt "runMain graft.PurityAudit"   (SPARK_GRAFT_SF_DIR, default
- * sf0.001; prints <key> <jobs-during-build>)
+ * sf0.001; prints <key> <declared kind> <jobs-during-build>)
  */
 object PurityAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("8")
     spark.sparkContext.setLogLevel("ERROR")
     Fixture.ensureStore(spark, sfDir)
 
@@ -36,15 +29,14 @@ object PurityAudit {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     })
-    val named = PipelineEntry.queries.toSeq.sortBy(_._1)
-    for ((name, fn) <- named) {
+    for (k <- SparkEntry.pipelineKeys.sortBy(_.name)) {
       // settle the async listener bus from the previous key
       Thread.sleep(300)
       val before = jobs.get()
-      val r = try { fn(spark, sfDir); "ok" }
+      val r = try { k.build(spark, sfDir); "ok" }
       catch { case e: Throwable => s"ERROR ${Option(e.getMessage).getOrElse("?").take(60)}" }
       Thread.sleep(300)
-      println(f"[purity] $name%-34s jobs=${jobs.get() - before}%-5d $r")
+      println(f"[purity] ${k.name}%-34s ${k.kind}%-8s jobs=${jobs.get() - before}%-5d $r")
     }
     spark.stop()
   }

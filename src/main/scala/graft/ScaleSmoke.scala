@@ -26,13 +26,7 @@ object ScaleSmoke {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // deployment sizing shared with Bench (see comment there)
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_SECTIONS=docs,ann (default both) — re-measuring one

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.{GraftOntology => O, PropertyGraph}
 import graft.operators._
-import graft.sources.{GraphStore, TpchGraph}
+import graft.sources.GraphStore
 
 /** Cached fixture state per (session, sf-dir): graph, subclass closure,
  * and the meta summary that /meta_knowledge_graph + /sri_test_triples
@@ -132,74 +131,78 @@ object Fixture {
     })
 }
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
+/** Driver contract — see SURVEY.md §2 for the inventory. Every key is
+ * one [[QueryKey]] record in its family's file under `keys/`; the maps
+ * below are views derived from those records. */
 object SparkEntry {
+  import QueryKey.{Prepared, Rebuild}
+
+  /** Graph keys run on the caller's serving session (Fixture.serving —
+   * answer-scale shuffle config over the shared cache); pipeline keys
+   * run on the caller's batch session. */
+  val graphKeys: Seq[QueryKey] = keys.GraphKeys.all
+  val pipelineKeys: Seq[QueryKey] = Seq(
+    keys.DedupKeys.all, keys.TextKeys.all, keys.CurationKeys.all,
+    keys.WebKeys.all, keys.CrawlKeys.all, keys.MediaKeys.all,
+    keys.StreamingKeys.all).flatten
+  val registry: Seq[QueryKey] = graphKeys ++ pipelineKeys
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("g03_onehop_fwd")(spark, "/root/testdata/sf0.001")
 
-  /** Prepared-statement cache for the point-lookup fast path: a pure
-   * graph lookup's DataFrame is built ONCE per (key, serving session,
-   * store) and re-EXECUTED on every call — Spark plans a DataFrame
-   * lazily and keeps the analyzed/optimized/compiled plan on the
-   * instance, so repeat calls skip analysis + optimization + codegen
-   * lookup and pay only job scheduling + the cached-partition scan.
-   * This is the serving-layer analog of the reference pre-building its
-   * lookup indexes once per boot (plover.py:1790 answer_query runs
-   * against prebuilt dicts); each call still runs a fresh Spark job
-   * over the shared cached graph, so results always reflect the store.
+  /** Prepared-plan cache for every Prepared key: a key's DataFrame is
+   * built ONCE per (key, session, corpus) and re-EXECUTED on every call —
+   * Spark plans a DataFrame lazily and keeps the analyzed/optimized/
+   * compiled plan on the instance, so repeat calls skip analysis +
+   * optimization + codegen lookup and pay only job scheduling + the
+   * scan. This is the serving-layer analog of the reference pre-building
+   * its lookup indexes once per boot (plover.py:1790 answer_query runs
+   * against prebuilt dicts); each call still runs a fresh Spark job, so
+   * results always reflect the store.
    *
    * Lifecycle (r11 advice): entries are built OUTSIDE the map's bin lock
    * (putIfAbsent — a racing duplicate build is harmless, both plans are
    * pure) so a slow plan construction never blocks unrelated lookups,
-   * and `evictPrepared` drops a session's entries when serving ends so a
-   * long-lived process doesn't pin dead sessions' plans (and whatever
+   * and `evictPrepared` drops a session's entries when it is retired so
+   * a long-lived process doesn't pin dead sessions' plans (and whatever
    * intermediates they persist) forever. The key space is otherwise
-   * bounded by design: |query keys| x |live serving sessions| x |stores|. */
+   * bounded by design: |Prepared keys| x |live sessions| x |corpora|. */
   private val prepared = new java.util.concurrent.ConcurrentHashMap[
     (String, SparkSession, String), DataFrame]()
 
-  /** Drop all prepared plans bound to `session` (call when a serving
-   * session is retired); unpersists any operator-materialized frames the
-   * evicted plans pinned. */
+  /** Drop all prepared plans bound to `session` (call when a session is
+   * retired); unpersists any operator-materialized frames the evicted
+   * plans pinned. */
   def evictPrepared(session: SparkSession): Unit = {
     val it = prepared.keySet.iterator()
     while (it.hasNext) if (it.next()._2 eq session) it.remove()
     graft.operators.OperatorCaches.drainMaterialized()
   }
 
-  /** Keys whose CONSTRUCTION is the operation under test — a file
-   * export/spool/roundtrip or an eager guard probe. Serving them from
-   * the prepared cache would skip that work, so they re-build per call. */
-  private val sideEffecting = Set(
-    "g25_kgx_roundtrip", "g29_cutoff_guard", "g30_ontology_roundtrip",
-    "g32_subclass_from_file", "g34_kgx_url_spool", "g35_equiv_map_dump")
+  /** Serve `k` on the session `on` derives from the caller's. */
+  private def route(k: QueryKey, on: SparkSession => SparkSession)
+      : (SparkSession, String) => DataFrame = k.kind match {
+    case Rebuild => (s, d) => k.build(on(s), d)
+    case Prepared => (s, d) => {
+      val key = (k.name, on(s), d)
+      val hit = prepared.get(key)
+      if (hit != null) hit
+      else {
+        val df = k.build(key._2, d) // built outside the bin lock
+        val raced = prepared.putIfAbsent(key, df)
+        if (raced != null) raced else df
+      }
+    }
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. Graph lookups
-   * route through the serving session (Fixture.serving — answer-scale
-   * shuffle config, shared cache) and, when pure, through the prepared-
-   * plan cache; pipeline operators stay on the caller's batch session. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    keys.GraphKeys.graphQueries.map { case (k, f) =>
-      if (sideEffecting(k))
-        k -> ((s: SparkSession, d: String) => f(Fixture.serving(s), d))
-      else
-        k -> ((s: SparkSession, d: String) => {
-          val sv = Fixture.serving(s)
-          val key = (k, sv, d)
-          val hit = prepared.get(key)
-          if (hit != null) hit
-          else {
-            val df = f(sv, d) // built outside the bin lock
-            val raced = prepared.putIfAbsent(key, df)
-            if (raced != null) raced else df
-          }
-        })
-    } ++ PipelineEntry.queries
+  /** Every key, routed: `queries(name)(session, corpusDir)`. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (graphKeys.map(k => k.name -> route(k, Fixture.serving)) ++
+      pipelineKeys.map(k => k.name -> route(k, identity))).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    keys.GraphKeys.graphOracleSql ++ PipelineEntry.oracleSql
+  /** For each key with an oracle, equivalent ANSI SQL runnable by DuckDB
+   * on the same parquet tables. Omitted keys get a weaker rows-only check. */
+  val oracleSql: Map[String, String] =
+    registry.flatMap(k => k.oracle.map(k.name -> _)).toMap
 }

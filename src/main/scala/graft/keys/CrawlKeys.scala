@@ -4,13 +4,14 @@ package keys
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import QueryKey.{Prepared, Rebuild}
 import PipelineFixtures._
 import OracleCtes._
 
 /** Crawl keys: WARC/WET/WAT ingest, CDX, HTTP decoding and redirects. */
 object CrawlKeys {
 
-  private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[QueryKey] = Seq(
     // P85 — WARC ingest round-trip (ISO 28500 — the Common Crawl
     // format, the first read of every web-scale pipeline): shard the
     // docs into record-gzipped .warc.gz segments on the executors,
@@ -19,7 +20,8 @@ object CrawlKeys {
     // (doc_id from the target URI, status, md5 of the recovered body).
     // The md5 proves byte-exact body round-trip through HTTP framing,
     // Content-Length slicing, and member-gzip.
-    "p85_warc_ingest" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p85_warc_ingest", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-ingest-${dir.replaceAll("[^0-9.]", "")}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
@@ -32,7 +34,9 @@ object CrawlKeys {
           col("status").cast("long").as("status"),
           md5(col("body")).as("body_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id, 200::BIGINT AS status, md5(text) AS body_md5
+FROM documents ORDER BY doc_id""")),
 
     // P86 — the crawl-to-corpus composition: WARC segments in, deduped
     // corpus out. The messy-URL fixture rides as each record's
@@ -41,7 +45,8 @@ object CrawlKeys {
     // (n_chars = length(body) — byte-exact round-trip proven by p85),
     // and the result hash-matches p78's oracle: three operators
     // composed end-to-end, one ground truth.
-    "p86_crawl_dedup" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p86_crawl_dedup", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-crawl-${dir.replaceAll("[^0-9.]", "")}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
@@ -57,14 +62,15 @@ object CrawlKeys {
           length(col("body")).cast("long").as("n_chars"),
           col("target_uri").as("url"))
       UrlOps.urlDedup(recovered).orderBy("canonical_url")
-    }),
+    }, oracle = Some(UrlDedupOracle)),
 
     // P91 — WET-to-analysis composition: Common Crawl's extracted-text
     // form (conversion records, payload IS the text) ingested and fed
     // straight into language ID — the realistic front door for the
     // whole text-analysis family. Shares p08's oracle: byte-exact
     // recovery means identical predictions and hit counts.
-    "p91_wet_langid" -> ((s, dir) => {
+    // Rebuild: exports the WET fixture it reads.
+    QueryKey("p91_wet_langid", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val out = s"/root/repo/target/wet-langid-${dir.replaceAll("[^0-9.]", "")}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
@@ -76,21 +82,22 @@ object CrawlKeys {
             .cast("long").as("doc_id"),
           col("body").as("text"))
       TextAnalysis.languageId(recovered).orderBy("id")
-    }),
+    }, oracle = Some(LangIdOracle)),
 
     // P93 — CDX index generation (Common Crawl's cc-index): WARC
     // segments in, urlkey-sorted capture index out — SURT urlkey,
     // canonical URL, status, content digest, payload size. Composes
     // the p85 WARC round-trip with the URL layer; the oracle derives
     // every field from the doc table + URL formula independently.
-    "p93_cdx_index" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it indexes.
+    QueryKey("p93_cdx_index", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val out = s"/root/repo/target/cdx-${dir.replaceAll("[^0-9.]", "")}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
       WarcSource.export(pageUrls(docs(s, dir)), out, docsPerFile = 100,
         urlCol = Some("url"))
       WarcSource.cdxIndex(WarcSource.records(s, out)).orderBy("urlkey")
-    }),
+    }, oracle = Some(CdxOracle)),
 
     // P131 — incremental re-crawl planning: two .warc.gz crawls of the
     // same sites (B drops %13 pages, rewrites %6, discovers %17 under
@@ -104,7 +111,8 @@ object CrawlKeys {
     // urlkey, sha256 digest, max-collapse, and verdict from the doc
     // table alone, so a canonicalization, framing, dedupe, or join
     // slip changes rows.
-    "p131_crawl_diff" -> ((s, dir) => {
+    // Rebuild: exports the two crawls it diffs.
+    QueryKey("p131_crawl_diff", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9.]", "")
       val outA = s"/root/repo/target/cdx-diff-a-$tag"
@@ -127,7 +135,28 @@ object CrawlKeys {
         WarcSource.cdxIndex(WarcSource.records(s, outA)),
         WarcSource.cdxIndex(WarcSource.records(s, outB)))
         .orderBy("urlkey")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+a0 AS (SELECT doc_id, text FROM documents
+       UNION ALL
+       SELECT doc_id, text || ' v2' FROM documents WHERE doc_id % 19 = 0),
+a AS (SELECT urlkey, max(digest) AS digest FROM (
+        SELECT 'com,example-' || (doc_id % 50) || ')/pg/' || doc_id
+          || '?a=1&b=2' AS urlkey, sha256(text) AS digest FROM a0)
+      GROUP BY urlkey),
+b0 AS (SELECT doc_id, CASE WHEN doc_id % 6 = 0 THEN text || ' updated'
+          ELSE text END AS text
+       FROM documents WHERE doc_id % 13 <> 0
+       UNION ALL
+       SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 17 = 0),
+b AS (SELECT 'com,example-' || (doc_id % 50) || ')/pg/' || doc_id
+        || '?a=1&b=2' AS urlkey, sha256(text) AS digest FROM b0)
+SELECT coalesce(a.urlkey, b.urlkey) AS urlkey,
+  CASE WHEN a.urlkey IS NULL THEN 'added'
+       WHEN b.urlkey IS NULL THEN 'removed'
+       WHEN a.digest <> b.digest THEN 'changed' ELSE 'same' END AS status,
+  a.digest AS digest_prev, b.digest AS digest_next
+FROM a FULL OUTER JOIN b ON a.urlkey = b.urlkey
+ORDER BY urlkey""")),
 
     // P133 — WARC revisit records (ISO 28500 crawl-time dedup): every
     // %9 page is captured TWICE, the second time as a `revisit` record
@@ -139,7 +168,8 @@ object CrawlKeys {
     // content hash. Oracle re-derives captures, revisit counts, and
     // the collapse from the doc table alone: a header-parse slip, a
     // digest-prefix slip, or a phantom/lost revisit all change rows.
-    "p133_warc_revisit" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p133_warc_revisit", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9.]", "")
       val out = s"/root/repo/target/warc-revisit-$tag"
@@ -154,7 +184,14 @@ object CrawlKeys {
           max(col("digest")).as("digest"),
           sum(col("n_bytes")).as("stored_bytes"))
         .orderBy("urlkey")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT 'org,example)/doc/' || doc_id AS urlkey,
+  (CASE WHEN doc_id % 9 = 0 THEN 2 ELSE 1 END)::BIGINT AS n_captures,
+  (CASE WHEN doc_id % 9 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_revisits,
+  1::BIGINT AS n_digests,
+  sha256(text) AS digest,
+  strlen(text)::BIGINT AS stored_bytes
+FROM documents ORDER BY urlkey""")),
 
     // P109 — the end-to-end web pipeline composition: WARC segments of
     // raw HTML pages in → parse → extract text → keep-best URL dedup
@@ -163,7 +200,8 @@ object CrawlKeys {
     // URL, the doc with the longest EXTRACTED text, capture count)
     // without running any of the stages — framing, extraction, and
     // dedup all have to be right at once.
-    "p109_web_pipeline" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p109_web_pipeline", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9]", "_")
       val out = s"/root/repo/target/webpipe-$tag"
@@ -183,7 +221,19 @@ object CrawlKeys {
       UrlOps.urlDedup(
         extracted.withColumn("n_chars", length(col("text"))))
         .orderBy("canonical_url")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+n AS (SELECT doc_id,
+  len(array_to_string(list_filter(list_transform(
+    string_split(regexp_replace(text, '[ \\t\\r\\x{00a0}]+', ' ', 'g'), chr(10)),
+    x -> trim(x)), x -> x <> ''), chr(10))) AS norm_len FROM documents),
+x AS (SELECT doc_id, doc_id // 3 AS grp,
+  2 * (4 + len(doc_id::VARCHAR)) + norm_len + 26 + 12 + 4 AS elen FROM n),
+r AS (SELECT *, row_number() OVER (PARTITION BY grp
+        ORDER BY elen DESC, doc_id ASC) AS rn,
+      count(*) OVER (PARTITION BY grp) AS cnt FROM x)
+SELECT 'example-' || (grp % 50) || '.com/Pg/' || grp || '?a=1&b=2'
+  AS canonical_url, doc_id AS kept_doc_id, cnt::BIGINT AS n_dups
+FROM r WHERE rn = 1 ORDER BY canonical_url""")),
 
     // P150 — HTTP transport decoding through the WARC front door:
     // real captured HTTP/1.1 responses routinely carry
@@ -199,7 +249,8 @@ object CrawlKeys {
     // slip diverges the hash. Scale shape inherits p85's: one task
     // per segment file, decode happens where the bytes land, nothing
     // shuffles.
-    "p150_http_decode" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p150_http_decode", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-transport-${dir.replaceAll("[^0-9.]", "")}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
@@ -219,7 +270,10 @@ object CrawlKeys {
           col("status").cast("long").as("status"),
           md5(col("body")).as("body_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id, doc_id % 5 AS lane, 200::BIGINT AS status,
+       md5(text) AS body_md5
+FROM documents ORDER BY doc_id""")),
 
     // P159 — zstd Content-Encoding at the WARC front door (the r18
     // verdict's #1 remaining real-capture gap): lanes by doc_id % 3
@@ -230,7 +284,8 @@ object CrawlKeys {
     // remains DOCUMENTED OUT (no pure-JDK decoder and no
     // org.brotli:dec on this classpath) and is spec-pinned to the
     // unknown-coding degrade: raw bytes kept, text suppressed.
-    "p159_content_codings" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p159_content_codings", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-zstd-${dir.replaceAll("[^0-9.]", "")}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
@@ -248,7 +303,9 @@ object CrawlKeys {
             .cast("long") % 3).as("lane"),
           md5(col("body")).as("body_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id, doc_id % 3 AS lane, md5(text) AS body_md5
+FROM documents ORDER BY doc_id""")),
 
     // P140 — WAT sidecar generation (completes the WARC/WAT/WET
     // artifact triple a crawl publishes; WARC p85, WET p91, CDX p93):
@@ -261,7 +318,8 @@ object CrawlKeys {
     // complete JSON byte-for-byte from the fixture formula — envelope
     // shape, field order, link order, and the href-walk's raw
     // extraction semantics (quoted/unquoted, fragment stop) all pinned.
-    "p140_wat" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture and its WAT sidecars.
+    QueryKey("p140_wat", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9.]", "")
       val warcOut = s"/root/repo/target/warc-wat-src-$tag"
@@ -280,7 +338,25 @@ object CrawlKeys {
             .cast("long").as("id"),
           col("target_uri"), col("body").as("wat"))
         .orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+d AS (SELECT doc_id,
+  'https://www.Example-' || (doc_id % 50) || '.com/Pg/' || doc_id
+    || '/?b=2&a=1' AS uri,
+  'https://Example-' || ((doc_id + 1) % 50) || '.com/Pg/' || (doc_id + 1)
+    || '?b=2&a=1&utm_source=x' AS l1,
+  '/Pg/' || (doc_id * 7 + 3) || '/?b=2&a=1&gclid=g' AS l2,
+  '/Pg/' || (doc_id * 3 + 1) || '?b=2&a=1' AS l3,
+  'Sub/' || doc_id || '?b=2&a=1' AS l4
+ FROM documents)
+SELECT doc_id AS id, uri AS target_uri,
+  '{"Envelope":{"Format":"WARC","WARC-Header-Metadata":{"WARC-Type":"response","WARC-Target-URI":"'
+  || uri || '","WARC-Record-ID":"<urn:graft:doc:' || doc_id
+  || '>"},"Payload-Metadata":{"Actual-Content-Type":"application/http; msgtype=response","HTTP-Response-Metadata":{"Response-Message":{"Status":"200"},"Headers":{"Content-Type":"text/html; charset=utf-8"},"HTML-Metadata":{"Head":{"Title":"Doc '
+  || doc_id || '"},"Links":[{"path":"A@/href","url":"' || l1
+  || '"},{"path":"A@/href","url":"' || l2
+  || '"},{"path":"A@/href","url":"' || l3
+  || '"},{"path":"A@/href","url":"' || l4 || '"}]}}}}}' AS wat
+FROM d ORDER BY id""")),
 
     // P155 — redirect edges (every real crawl is full of 3xx
     // captures; URL dedup collapses chains against them and frontiers
@@ -291,7 +367,8 @@ object CrawlKeys {
     // Quarters of the corpus ride 200-no-edge / 301 absolute /
     // 302 root-relative / 308 path-relative (../ folding
     // load-bearing); the oracle re-derives each edge closed-form.
-    "p155_redirect_edges" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p155_redirect_edges", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-redirect-${dir.replaceAll("[^0-9.]", "")}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
@@ -313,7 +390,17 @@ object CrawlKeys {
             .cast("long").as("doc_id"),
           col("src_url"), col("dst_url"), col("status"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id,
+  'example.org/doc/' || doc_id AS src_url,
+  CASE doc_id % 4
+    WHEN 1 THEN 'example.org/doc/' || doc_id || '-new'
+    WHEN 2 THEN 'example.org/moved/' || doc_id
+    ELSE 'example.org/r/' || doc_id
+  END AS dst_url,
+  (CASE doc_id % 4 WHEN 1 THEN 301 WHEN 2 THEN 302
+    ELSE 308 END)::BIGINT AS status
+FROM documents WHERE doc_id % 4 <> 0 ORDER BY doc_id""")),
 
     // P156 — redirect-chain collapse (p155's companion: a crawl
     // captures EVERY hop of a moved page, and URL dedup must key on
@@ -323,7 +410,8 @@ object CrawlKeys {
     // … → f_{root}); the oracle computes each chain's root in closed
     // form, so a doubling slip (off-by-one hop, lost terminal) breaks
     // most rows.
-    "p156_redirect_collapse" -> ((s, dir) => {
+    // Rebuild: iterates redirect hops to a fixed point.
+    QueryKey("p156_redirect_collapse", Rebuild, (s, dir) => {
       val base = docs(s, dir).where(col("doc_id") % 4 =!= 0)
       val edges = base.select(
         concat(lit("u"), col("doc_id")).as("src_url"),
@@ -335,7 +423,10 @@ object CrawlKeys {
             .cast("long").as("doc_id"),
           col("src_url"), col("final_url"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id, 'u' || doc_id AS src_url,
+  'f' || (doc_id - (doc_id % 4) + 1) AS final_url
+FROM documents WHERE doc_id % 4 <> 0 ORDER BY doc_id""")),
 
     // P154 — HTTP charset decoding (the web is not all UTF-8: legacy
     // pages declare ISO-8859-1 / windows-1252 in the Content-Type
@@ -348,7 +439,8 @@ object CrawlKeys {
     // charset ONLY in <meta> (HTML5 prescan). The oracle builds each
     // decoded body closed-form — any precedence or decode slip
     // diverges md5 on a fifth of the rows.
-    "p154_charset_decode" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p154_charset_decode", Rebuild, (s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-charset-${dir.replaceAll("[^0-9.]", "")}"
@@ -382,7 +474,17 @@ object CrawlKeys {
             .cast("long") % 5).as("lane"),
           md5(col("body")).as("body_md5"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+e AS (SELECT doc_id, doc_id % 5 AS lane,
+  CASE doc_id % 5
+    WHEN 0 THEN text
+    WHEN 1 THEN text || ' café'
+    WHEN 2 THEN text || ' €uro'
+    WHEN 3 THEN text || ' 𝄞'
+    ELSE '<html><head><meta charset="windows-1252"><title>t</title></head><body>'
+      || text || ' €</body></html>'
+  END AS body FROM documents)
+SELECT doc_id, lane, md5(body) AS body_md5 FROM e ORDER BY doc_id""")),
 
     // P135 — CDX point lookup (the serving read of the p93 index):
     // the crawl publishes its urlkey-SORTED index once; a driver-sized
@@ -393,7 +495,8 @@ object CrawlKeys {
     // into the parquet scan + native set probe). The oracle re-derives
     // exactly the %11 hit rows; a canonicalization slip at EITHER end,
     // a probe leak, or a phantom miss-row all change rows.
-    "p135_cdx_lookup" -> ((s, dir) => {
+    // Rebuild: exports and indexes the WARC fixture and collects the index.
+    QueryKey("p135_cdx_lookup", Rebuild, (s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
       val tag = dir.replaceAll("[^0-9.]", "")
@@ -417,176 +520,7 @@ object CrawlKeys {
         s"HTTPS://WWW.Example-${i % 50}.com:443/Pg/$i?b=2&a=1#frag") ++
         hitIds.map(i => s"https://example-${i % 50}.com/Pg/${i + 1000000}")
       WarcSource.cdxLookup(index, urls).orderBy("urlkey")
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    // p91 SHARES p08's oracle: language-ID over the WET-recovered text
-    // must equal language-ID over the parquet text — the conversion
-    // records round-trip byte-exactly.
-    "p91_wet_langid" -> LangIdOracle,
-
-    // p86 SHARES it too: the WARC round-trip + canonicalize + keep-best
-    // composition must land on the identical deduped corpus.
-    "p86_crawl_dedup" -> UrlDedupOracle,
-
-    // p85: the oracle derives the expected records straight from the
-    // doc table (url/status by construction, md5(text) = the body
-    // hash) — a framing, Content-Length, gzip, or charset slip in
-    // either the writer or the parser diverges the hashes.
-    "p85_warc_ingest" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id, 200::BIGINT AS status, md5(text) AS body_md5
-FROM documents ORDER BY doc_id""",
-
-    // p150: same closed form as p85 — the transport lanes (chunked /
-    // gzip / deflate / chunked+gzip from doc_id % 5) must be
-    // INVISIBLE in the recovered text, so the oracle is exactly the
-    // undecorated document table; any lane whose decode slips
-    // diverges md5(text) for a fifth of the rows.
-    "p150_http_decode" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id, doc_id % 5 AS lane, 200::BIGINT AS status,
-       md5(text) AS body_md5
-FROM documents ORDER BY doc_id""",
-
-    // p159: p150's closed form with the zstd lanes — the codings must
-    // be INVISIBLE in the recovered text, so the oracle is exactly
-    // the undecorated document table; a framing or frame-decode slip
-    // diverges md5(text) for a third of the rows.
-    "p159_content_codings" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id, doc_id % 3 AS lane, md5(text) AS body_md5
-FROM documents ORDER BY doc_id""",
-
-    // p93: every CDX field re-derived from the doc table + URL formula
-    // — urlkey by hand-SURTing the canonical form, digest/size from
-    // the text the WARC body must round-trip byte-exactly.
-    "p93_cdx_index" -> CdxOracle,
-
-    // p131: both crawls' indexes re-derived from the doc table (p93's
-    // urlkey/digest formulas + the B-side mutation arithmetic + the
-    // A-side %19 double-capture collapsed by max(digest)), then the
-    // same full-outer classification.
-    "p131_crawl_diff" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-a0 AS (SELECT doc_id, text FROM documents
-       UNION ALL
-       SELECT doc_id, text || ' v2' FROM documents WHERE doc_id % 19 = 0),
-a AS (SELECT urlkey, max(digest) AS digest FROM (
-        SELECT 'com,example-' || (doc_id % 50) || ')/pg/' || doc_id
-          || '?a=1&b=2' AS urlkey, sha256(text) AS digest FROM a0)
-      GROUP BY urlkey),
-b0 AS (SELECT doc_id, CASE WHEN doc_id % 6 = 0 THEN text || ' updated'
-          ELSE text END AS text
-       FROM documents WHERE doc_id % 13 <> 0
-       UNION ALL
-       SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 17 = 0),
-b AS (SELECT 'com,example-' || (doc_id % 50) || ')/pg/' || doc_id
-        || '?a=1&b=2' AS urlkey, sha256(text) AS digest FROM b0)
-SELECT coalesce(a.urlkey, b.urlkey) AS urlkey,
-  CASE WHEN a.urlkey IS NULL THEN 'added'
-       WHEN b.urlkey IS NULL THEN 'removed'
-       WHEN a.digest <> b.digest THEN 'changed' ELSE 'same' END AS status,
-  a.digest AS digest_prev, b.digest AS digest_next
-FROM a FULL OUTER JOIN b ON a.urlkey = b.urlkey
-ORDER BY urlkey""",
-
-    // p109: the composed chain in closed form — extracted length =
-    // two 'Doc {id}' lines + normalized doc text + the 26-char entity
-    // line + the 8-char anchor line + 4 newlines; keep-best matches
-    // urlDedup's (longest, then min id) rule over each 3-capture group.
-    "p109_web_pipeline" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-n AS (SELECT doc_id,
-  len(array_to_string(list_filter(list_transform(
-    string_split(regexp_replace(text, '[ \\t\\r\\x{00a0}]+', ' ', 'g'), chr(10)),
-    x -> trim(x)), x -> x <> ''), chr(10))) AS norm_len FROM documents),
-x AS (SELECT doc_id, doc_id // 3 AS grp,
-  2 * (4 + len(doc_id::VARCHAR)) + norm_len + 26 + 12 + 4 AS elen FROM n),
-r AS (SELECT *, row_number() OVER (PARTITION BY grp
-        ORDER BY elen DESC, doc_id ASC) AS rn,
-      count(*) OVER (PARTITION BY grp) AS cnt FROM x)
-SELECT 'example-' || (grp % 50) || '.com/Pg/' || grp || '?a=1&b=2'
-  AS canonical_url, doc_id AS kept_doc_id, cnt::BIGINT AS n_dups
-FROM r WHERE rn = 1 ORDER BY canonical_url""",
-
-    // p156: each chain's final target computed closed-form (the root
-    // of id's group is id - id%4 + 1) — the SQL never follows an
-    // edge, so the pointer-doubling must land every hop of every
-    // chain on its true terminal.
-    "p156_redirect_collapse" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id, 'u' || doc_id AS src_url,
-  'f' || (doc_id - (doc_id % 4) + 1) AS final_url
-FROM documents WHERE doc_id % 4 <> 0 ORDER BY doc_id""",
-
-    // p155: each redirect edge re-derived closed-form — the SQL never
-    // resolves a URL, so the Location header transit, the relative
-    // resolution (../ folding included), and the canonicalization must
-    // all be exact; 200 rows must contribute NO edge.
-    "p155_redirect_edges" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id,
-  'example.org/doc/' || doc_id AS src_url,
-  CASE doc_id % 4
-    WHEN 1 THEN 'example.org/doc/' || doc_id || '-new'
-    WHEN 2 THEN 'example.org/moved/' || doc_id
-    ELSE 'example.org/r/' || doc_id
-  END AS dst_url,
-  (CASE doc_id % 4 WHEN 1 THEN 301 WHEN 2 THEN 302
-    ELSE 308 END)::BIGINT AS status
-FROM documents WHERE doc_id % 4 <> 0 ORDER BY doc_id""",
-
-    // p154: each lane's decoded body rebuilt closed-form in SQL (the
-    // oracle never touches a byte encoding — DuckDB strings are UTF-8,
-    // so equality proves the parser recovered the exact characters
-    // through latin-1/cp1252/UTF-16/meta-prescan transit).
-    "p154_charset_decode" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-e AS (SELECT doc_id, doc_id % 5 AS lane,
-  CASE doc_id % 5
-    WHEN 0 THEN text
-    WHEN 1 THEN text || ' café'
-    WHEN 2 THEN text || ' €uro'
-    WHEN 3 THEN text || ' 𝄞'
-    ELSE '<html><head><meta charset="windows-1252"><title>t</title></head><body>'
-      || text || ' €</body></html>'
-  END AS body FROM documents)
-SELECT doc_id, lane, md5(body) AS body_md5 FROM e ORDER BY doc_id""",
-
-    // p140: the COMPLETE WAT JSON envelope re-derived byte-for-byte
-    // from the fixture formula — to_json's compact rendering, struct
-    // field order, the raw (unresolved) href values in document order,
-    // and the quoted-scan's fragment stop are all load-bearing; a
-    // field-order slip, an escape slip, or a link-walk slip changes
-    // bytes.
-    "p140_wat" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-d AS (SELECT doc_id,
-  'https://www.Example-' || (doc_id % 50) || '.com/Pg/' || doc_id
-    || '/?b=2&a=1' AS uri,
-  'https://Example-' || ((doc_id + 1) % 50) || '.com/Pg/' || (doc_id + 1)
-    || '?b=2&a=1&utm_source=x' AS l1,
-  '/Pg/' || (doc_id * 7 + 3) || '/?b=2&a=1&gclid=g' AS l2,
-  '/Pg/' || (doc_id * 3 + 1) || '?b=2&a=1' AS l3,
-  'Sub/' || doc_id || '?b=2&a=1' AS l4
- FROM documents)
-SELECT doc_id AS id, uri AS target_uri,
-  '{"Envelope":{"Format":"WARC","WARC-Header-Metadata":{"WARC-Type":"response","WARC-Target-URI":"'
-  || uri || '","WARC-Record-ID":"<urn:graft:doc:' || doc_id
-  || '>"},"Payload-Metadata":{"Actual-Content-Type":"application/http; msgtype=response","HTTP-Response-Metadata":{"Response-Message":{"Status":"200"},"Headers":{"Content-Type":"text/html; charset=utf-8"},"HTML-Metadata":{"Head":{"Title":"Doc '
-  || doc_id || '"},"Links":[{"path":"A@/href","url":"' || l1
-  || '"},{"path":"A@/href","url":"' || l2
-  || '"},{"path":"A@/href","url":"' || l3
-  || '"},{"path":"A@/href","url":"' || l4 || '"}]}}}}}' AS wat
-FROM d ORDER BY id""",
-
-    // p135: the hit rows are exactly p93's index rows for the FIRST 64
-    // %11 docs (the bounded request batch) — the miss URLs must
-    // contribute nothing.
-    "p135_cdx_lookup" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 hits AS (SELECT doc_id, text FROM documents WHERE doc_id % 11 = 0
          ORDER BY doc_id LIMIT 64)
 SELECT
@@ -595,20 +529,6 @@ SELECT
   200::BIGINT AS status,
   sha256(text) AS digest,
   strlen(text)::BIGINT AS n_bytes
-FROM hits ORDER BY urlkey""",
-
-    // p133: captures re-derived from the doc table — one response per
-    // doc plus one headers-only revisit per %9 doc whose digest equals
-    // the referent's, so the collapse is closed-form: n_digests is
-    // ALWAYS 1 and stored bytes count the response payload only.
-    "p133_warc_revisit" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT 'org,example)/doc/' || doc_id AS urlkey,
-  (CASE WHEN doc_id % 9 = 0 THEN 2 ELSE 1 END)::BIGINT AS n_captures,
-  (CASE WHEN doc_id % 9 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_revisits,
-  1::BIGINT AS n_digests,
-  sha256(text) AS digest,
-  strlen(text)::BIGINT AS stored_bytes
-FROM documents ORDER BY urlkey"""
+FROM hits ORDER BY urlkey"""))
   )
 }

@@ -4,13 +4,14 @@ package keys
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import QueryKey.{Prepared, Rebuild}
 import PipelineFixtures._
 import OracleCtes._
 
 /** Media keys: images, audio, video, PDF and container metadata. */
 object MediaKeys {
 
-  private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[QueryKey] = Seq(
     // P12+++ / P76 — audio near-duplicate detection via envelope hash
     // (the WAV twin of p74's image dHash): real javax.sound decode →
     // 65 exact integer frame-energy sums → 64 delta-sign bits,
@@ -20,7 +21,8 @@ object MediaKeys {
     // oracle enumerates the planted variant pairs (same contract as
     // p74: codec/hash/banding break = missing rows, over-eager hash =
     // extra rows). Ids are doc_id*10+variant.
-    "p76_audio_neardup" -> ((s, dir) => {
+    // Rebuild: materializes the hash self-join side (SelfJoinMaterialize).
+    QueryKey("p76_audio_neardup", Rebuild, (s, dir) => {
       import s.implicits._
       val clips = docs(s, dir).select(col("doc_id")).as[Long]
         .flatMap { d =>
@@ -31,7 +33,14 @@ object MediaKeys {
         }.toDF("id", "payload")
       Dedup.hammingPairs64(Multimodal.audioEnvelopeHashes(s, clips))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+v AS (SELECT doc_id, 0 AS var FROM documents
+      UNION ALL SELECT doc_id, 1 FROM documents WHERE doc_id % 4 = 0
+      UNION ALL SELECT doc_id, 2 FROM documents WHERE doc_id % 6 = 0)
+SELECT a.doc_id * 10 + a.var AS id_a, b.doc_id * 10 + b.var AS id_b,
+  0::BIGINT AS hamming
+FROM v a JOIN v b ON a.doc_id = b.doc_id AND a.var < b.var
+ORDER BY id_a, id_b""")),
 
     // P12+++/P74++, key p77_video_neardup — the video member of the
     // near-dup triad: per-frame dHash of the DECODED frames, strict-
@@ -42,7 +51,8 @@ object MediaKeys {
     // fingerprint-identical by construction; videos only on doc_id%5
     // (video corpora are sparser than image ones, and each payload
     // costs NeardupVideoFrames codec passes). Ids are doc_id*10+variant.
-    "p77_video_neardup" -> ((s, dir) => {
+    // Rebuild: materializes the hash self-join side (SelfJoinMaterialize).
+    QueryKey("p77_video_neardup", Rebuild, (s, dir) => {
       import s.implicits._
       val videos = docs(s, dir).select(col("doc_id")).as[Long]
         .filter(_ % 5 == 0)
@@ -54,7 +64,7 @@ object MediaKeys {
         }.toDF("id", "payload")
       Dedup.hammingPairs64(Multimodal.videoFingerprints(s, videos))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = Some(VideoNeardupPairsOracle)),
 
     // P142 — MP4 keyframe-byte near-dup (extends the near-dup triad to
     // INTER-FRAME codecs without a decoder — the r16 verdict's #5 ask):
@@ -66,7 +76,8 @@ object MediaKeys {
     // trak, split chunks, reverse-stored chunk-per-sample, shuffled
     // stbl box order) of identical sample bytes — fingerprints match
     // ONLY if extent resolution is exact.
-    "p142_mp4_keyframe_neardup" -> ((s, dir) => {
+    // Rebuild: materializes the hash self-join side (SelfJoinMaterialize).
+    QueryKey("p142_mp4_keyframe_neardup", Rebuild, (s, dir) => {
       import s.implicits._
       val videos = docs(s, dir).select(col("doc_id")).as[Long]
         .filter(_ % 5 == 0)
@@ -78,12 +89,22 @@ object MediaKeys {
         }.toDF("id", "payload")
       Dedup.hammingPairs64(Mp4.keyframeFingerprints(videos))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = Some(VideoNeardupPairsOracle)),
 
     // P12 — multimodal binary-column plumbing (expression feature path).
-    "p12_multimodal" -> ((s, dir) =>
+    QueryKey("p12_multimodal", Prepared, (s, dir) =>
       Multimodal.features(Multimodal.fromDocuments(docs(s, dir)))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id,
+  CASE WHEN doc_id % 3 = 0 THEN 'image'
+       WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS modality,
+  octet_length(encode(text))::BIGINT AS byte_len,
+  (n_chars % 640 + 1)::INTEGER AS width,
+  (doc_id % 480 + 1)::INTEGER AS height,
+  (n_chars % 640 + 1)::BIGINT * (doc_id % 480 + 1)::BIGINT AS n_pixels,
+  md5(text) AS payload_hash
+FROM documents ORDER BY doc_id""")),
 
     // P12+, key p47_video_mjpeg — REAL video decode: deterministic
     // MJPEG-in-AVI payloads (dims/frames are formulas of doc_id) are
@@ -93,7 +114,7 @@ object MediaKeys {
     // the stub's declared 0-dims and hash-mismatch. Brightness is
     // codec-implementation-dependent (lossy JPEG), so it stays out of
     // the key; the spec bounds it with a tolerance instead.
-    "p47_video_mjpeg" -> ((s, dir) => {
+    QueryKey("p47_video_mjpeg", Prepared, (s, dir) => {
       import s.implicits._
       val ids = docs(s, dir).where(col("doc_id") < 60)
         .select(col("doc_id")).as[Long]
@@ -110,7 +131,12 @@ object MediaKeys {
         .select(col("doc_id"), col("width"), col("height"),
           col("n_pixels").as("n_frames"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id,
+  (doc_id % 16 + 8)::INTEGER AS width,
+  (doc_id % 12 + 8)::INTEGER AS height,
+  (doc_id % 3 + 1)::BIGINT AS n_frames
+FROM documents WHERE doc_id < 60 ORDER BY doc_id""")),
 
     // P12++ / P74 — image near-duplicate detection via perceptual dHash
     // (the LAION-style multimodal dedup step): deterministic grayscale
@@ -124,7 +150,8 @@ object MediaKeys {
     // the doc table alone, so a codec/hash/banding break surfaces as
     // missing rows and an over-eager hash (cross-doc collisions) as
     // extra rows. Ids are doc_id*10+variant.
-    "p74_image_neardup" -> ((s, dir) => {
+    // Rebuild: materializes the hash self-join side (SelfJoinMaterialize).
+    QueryKey("p74_image_neardup", Rebuild, (s, dir) => {
       import s.implicits._
       val images = docs(s, dir).select(col("doc_id")).as[Long]
         .flatMap { d =>
@@ -135,7 +162,7 @@ object MediaKeys {
         }.toDF("id", "payload")
       Dedup.hammingPairs64(Multimodal.imageDHashes(s, images))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = Some(ImageNearDupOracle)),
 
     // P74+ / P85+, key p111_warc_binary — the crawl-to-multimodal
     // composition the text-only WARC path couldn't express: the SAME
@@ -148,7 +175,8 @@ object MediaKeys {
     // text column stays null for the binary type (decode is lazy, not
     // destructive). Scale shape inherits both parents': one task per
     // segment file, payloads never cross a shuffle.
-    "p111_warc_binary" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p111_warc_binary", Rebuild, (s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-binary-${dir.replaceAll("[^0-9.]", "")}"
@@ -170,7 +198,7 @@ object MediaKeys {
           col("body_bytes").as("payload"))
       Dedup.hammingPairs64(Multimodal.imageDHashes(s, recovered))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = Some(ImageNearDupOracle)),
 
     // P118 — pure-JDK PDF text extraction over the binary front door
     // (p111's convention, application/pdf instead of image/png): every
@@ -185,7 +213,8 @@ object MediaKeys {
     // text bytes. Scale shape: generate and extract are both batched
     // mapPartitions where the bytes land; one task per segment file in
     // between; nothing crosses a shuffle.
-    "p118_pdf_extract" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p118_pdf_extract", Rebuild, (s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-pdf-${dir.replaceAll("[^0-9.]", "")}"
@@ -212,7 +241,19 @@ object MediaKeys {
             .cast("long").as("id"),
           col("body_bytes").as("payload"))
       Pdf.extractTexts(recovered).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+e AS (SELECT doc_id,
+        'Doc ' || doc_id || ' (pdf) A' || chr(10) || array_to_string(
+          [array_to_string(toks[k*10+1 : k*10+10], ' ')
+           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
+          chr(10)) AS text
+      FROM w)
+SELECT doc_id AS id, TRUE AS xref_ok, 1::BIGINT AS n_streams,
+  length(text)::BIGINT AS n_chars, text
+FROM e ORDER BY id""")),
 
     // P124 — end-to-end PDF pipeline (p109's sibling through the
     // OTHER binary door): fixture PDFs ride a .warc.gz crawl segment,
@@ -221,7 +262,8 @@ object MediaKeys {
     // the oracle composes p118's closed-form re-typeset with p09's
     // quality formula, so every stage (deflate → warc → inflate →
     // operator machine → tokenizer → ratios) is checked end to end.
-    "p124_pdf_pipeline" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p124_pdf_pipeline", Rebuild, (s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-pdfq-${dir.replaceAll("[^0-9.]", "")}"
@@ -251,6 +293,39 @@ object MediaKeys {
         Pdf.extractTexts(recovered).select(col("id").as("doc_id"),
           col("text")))
         .orderBy("id")
+    }, oracle = Some {
+      val stop = graft.functions.TextFunctions.DefaultStopwords("en")
+        .map("'" + _ + "'").mkString(", ")
+      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+e AS (SELECT doc_id,
+        'Doc ' || doc_id || ' (pdf) A' || chr(10) || array_to_string(
+          [array_to_string(toks[k*10+1 : k*10+10], ' ')
+           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
+          chr(10)) AS text
+      FROM w),
+base AS (
+  SELECT doc_id AS id, length(text)::BIGINT AS n_chars,
+         string_split_regex(lower(trim(text)), '\\s+') AS t,
+         length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))::BIGINT AS punct
+  FROM e),
+m AS (
+  SELECT id, n_chars, len(t)::BIGINT AS n_tokens,
+    list_reduce([0]::BIGINT[] || list_transform(t, x -> length(x)::BIGINT),
+      (a,b) -> a+b)::DOUBLE / len(t)::DOUBLE AS mean_len,
+    punct::DOUBLE / n_chars::DOUBLE AS punct_ratio,
+    len(list_filter(t, x -> list_contains([$stop], x)))::DOUBLE / len(t)::DOUBLE
+      AS stop_ratio
+  FROM base)
+SELECT id, n_chars, n_tokens,
+  round(mean_len, 6) AS mean_token_len,
+  round(punct_ratio, 6) AS punct_ratio,
+  round(stop_ratio, 6) AS stopword_ratio,
+  round(GREATEST(0.0, 1.0 - abs(mean_len - 5.0) / 10.0 - punct_ratio * 2.0
+    + stop_ratio * 0.5), 6) AS quality_score
+FROM m ORDER BY id"""
     }),
 
     // P139 — Type0/CID composite-font PDF text via ToUnicode CMaps (the
@@ -266,7 +341,7 @@ object MediaKeys {
     // re-typesets the text closed-form, never touching a PDF byte.
     // Scale shape: generate and extract are batched mapPartitions in
     // one task; nothing shuffles.
-    "p139_pdf_cid" -> ((s, dir) => {
+    QueryKey("p139_pdf_cid", Prepared, (s, dir) => {
       import s.implicits._
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -278,7 +353,19 @@ object MediaKeys {
         })
         .toDF("id", "payload")
       Pdf.extractTexts(pdfs).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+e AS (SELECT doc_id,
+        'Doc ' || doc_id || ' (cid) A' || chr(10) || array_to_string(
+          [array_to_string(toks[k*10+1 : k*10+10], ' ')
+           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
+          chr(10)) AS text
+      FROM w)
+SELECT doc_id AS id, TRUE AS xref_ok, 2::BIGINT AS n_streams,
+  length(text)::BIGINT AS n_chars, text
+FROM e ORDER BY id""")),
 
     // P146 — PDF transport-filter cascades (the real tool-generated
     // shape: ASCIIHex / ASCII85 wrapping Flate; previously any
@@ -288,7 +375,7 @@ object MediaKeys {
     // RC4-encrypted — decrypt-then-decode order (ISO 32000-1 §7.6.2)
     // is end-to-end load-bearing. The oracle is p118's closed-form
     // re-typeset: a codec slip anywhere changes text bytes.
-    "p146_pdf_filters" -> ((s, dir) => {
+    QueryKey("p146_pdf_filters", Prepared, (s, dir) => {
       import s.implicits._
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -298,7 +385,19 @@ object MediaKeys {
         })
         .toDF("id", "payload")
       Pdf.extractTexts(pdfs).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+e AS (SELECT doc_id,
+        'Doc ' || doc_id || ' (pdf) A' || chr(10) || array_to_string(
+          [array_to_string(toks[k*10+1 : k*10+10], ' ')
+           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
+          chr(10)) AS text
+      FROM w)
+SELECT doc_id AS id, TRUE AS xref_ok, 1::BIGINT AS n_streams,
+  length(text)::BIGINT AS n_chars, text
+FROM e ORDER BY id""")),
 
     // P147 — PDF 1.5 object streams (/ObjStm): the page dict, the
     // Type0 font, and its descendant all live INSIDE a Flate object
@@ -308,7 +407,7 @@ object MediaKeys {
     // emit exactly this shape; p139 covers the classic file-level
     // layout). Oracle: the same closed-form CID re-typeset, n_streams
     // now 3 (content + CMap + ObjStm).
-    "p147_pdf_objstm" -> ((s, dir) => {
+    QueryKey("p147_pdf_objstm", Prepared, (s, dir) => {
       import s.implicits._
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -317,7 +416,19 @@ object MediaKeys {
         })
         .toDF("id", "payload")
       Pdf.extractTexts(pdfs).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+e AS (SELECT doc_id,
+        'Doc ' || doc_id || ' (cid) A' || chr(10) || array_to_string(
+          [array_to_string(toks[k*10+1 : k*10+10], ' ')
+           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
+          chr(10)) AS text
+      FROM w)
+SELECT doc_id AS id, TRUE AS xref_ok, 3::BIGINT AS n_streams,
+  length(text)::BIGINT AS n_chars, text
+FROM e ORDER BY id""")),
 
     // P149 — AES-256 encrypted PDFs (V5 — the PDF 2.0 / Acrobat X+
     // class, the last documented-out handler): halves of the corpus
@@ -327,7 +438,7 @@ object MediaKeys {
     // directly (no per-object keys). Oracle: the closed-form
     // re-typeset — a hash-round slip, a salt slip, or an unwrap slip
     // yields no text and kills the match.
-    "p149_pdf_aes256" -> ((s, dir) => {
+    QueryKey("p149_pdf_aes256", Prepared, (s, dir) => {
       import s.implicits._
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -336,7 +447,19 @@ object MediaKeys {
         })
         .toDF("id", "payload")
       Pdf.extractTexts(pdfs).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+e AS (SELECT doc_id,
+        'Doc ' || doc_id || ' (pdf) A' || chr(10) || array_to_string(
+          [array_to_string(toks[k*10+1 : k*10+10], ' ')
+           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
+          chr(10)) AS text
+      FROM w)
+SELECT doc_id AS id, TRUE AS xref_ok, 1::BIGINT AS n_streams,
+  length(text)::BIGINT AS n_chars, text
+FROM e ORDER BY id""")),
 
     // P151 — PDF stream predictors (the r17 verdict's #2: real
     // tool-generated PDFs almost universally write their ObjStm and
@@ -349,7 +472,7 @@ object MediaKeys {
     // and font dicts, so un-prediction must run inside the ObjStm
     // expansion for ANY text to come out. Oracle: the closed-form
     // re-typeset per lane ((pdf) classic / (cid) ObjStm).
-    "p151_pdf_predictor" -> ((s, dir) => {
+    QueryKey("p151_pdf_predictor", Prepared, (s, dir) => {
       import s.implicits._
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -359,7 +482,22 @@ object MediaKeys {
         })
         .toDF("id", "payload")
       Pdf.extractTexts(pdfs).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+e AS (SELECT doc_id,
+        'Doc ' || doc_id ||
+          CASE WHEN doc_id % 4 = 3 THEN ' (cid) A' ELSE ' (pdf) A' END ||
+          chr(10) || array_to_string(
+          [array_to_string(toks[k*10+1 : k*10+10], ' ')
+           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
+          chr(10)) AS text
+      FROM w)
+SELECT doc_id AS id, TRUE AS xref_ok,
+  (CASE WHEN doc_id % 4 = 3 THEN 3 ELSE 1 END)::BIGINT AS n_streams,
+  length(text)::BIGINT AS n_chars, text
+FROM e ORDER BY id""")),
 
     // P160 — PDF LZWDecode + RunLengthDecode (the r18 verdict's #3:
     // LZW is ubiquitous in pre-2005 tool output and both are fully
@@ -371,7 +509,7 @@ object MediaKeys {
     // /ObjStm holding the page and font dicts, so the LZW decode must
     // run inside ObjStm expansion for ANY text to come out. Oracle:
     // the closed-form re-typeset per lane.
-    "p160_pdf_lzw" -> ((s, dir) => {
+    QueryKey("p160_pdf_lzw", Prepared, (s, dir) => {
       import s.implicits._
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -382,7 +520,22 @@ object MediaKeys {
         })
         .toDF("id", "payload")
       Pdf.extractTexts(pdfs).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+e AS (SELECT doc_id,
+        'Doc ' || doc_id ||
+          CASE WHEN doc_id % 5 = 4 THEN ' (cid) A' ELSE ' (pdf) A' END ||
+          chr(10) || array_to_string(
+          [array_to_string(toks[k*10+1 : k*10+10], ' ')
+           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
+          chr(10)) AS text
+      FROM w)
+SELECT doc_id AS id, TRUE AS xref_ok,
+  (CASE WHEN doc_id % 5 = 4 THEN 3 ELSE 1 END)::BIGINT AS n_streams,
+  length(text)::BIGINT AS n_chars, text
+FROM e ORDER BY id""")),
 
     // P161 — PDF image XObjects into the multimodal family (the r18
     // verdict's #4: DCT/JPEG image XObjects are prime crawl payload,
@@ -395,7 +548,8 @@ object MediaKeys {
     // bytes and the SHARED dHash + banded-hamming join must pair the
     // two doors exactly (identical bytes ⇒ hamming 0). Oracle: the
     // pair list closed-form from the planting rule.
-    "p161_pdf_images" -> ((s, dir) => {
+    // Rebuild: materializes the hash self-join side (SelfJoinMaterialize).
+    QueryKey("p161_pdf_images", Rebuild, (s, dir) => {
       import s.implicits._
       val base = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -423,7 +577,9 @@ object MediaKeys {
       Dedup.hammingPairs64(Multimodal.imageDHashes(s,
           standalone.unionByName(embedded)))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id * 10 AS id_a, doc_id * 10 + 1 AS id_b, 0::BIGINT AS hamming
+FROM documents WHERE doc_id % 3 = 0 ORDER BY id_a, id_b""")),
 
     // P162 — RAW-SAMPLE PDF image XObjects (p161's sibling for the
     // PNG-converted class real writers embed: Flate or LZW over
@@ -439,7 +595,8 @@ object MediaKeys {
     // so the pair lands at hamming 0 with the hash equal to the
     // closed-form expectedDHash. Oracle: the pair list from the
     // planting rule.
-    "p162_pdf_image_raw" -> ((s, dir) => {
+    // Rebuild: materializes the hash self-join side (SelfJoinMaterialize).
+    QueryKey("p162_pdf_image_raw", Rebuild, (s, dir) => {
       import s.implicits._
       val base = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -460,7 +617,9 @@ object MediaKeys {
       Dedup.hammingPairs64(Multimodal.imageDHashes(s,
           standalone.unionByName(embedded)))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id * 10 AS id_a, doc_id * 10 + 1 AS id_b, 0::BIGINT AS hamming
+FROM documents WHERE doc_id % 3 = 1 ORDER BY id_a, id_b""")),
 
     // P164 — MP3 frame metadata (MP3 is the dominant crawl AUDIO
     // format; the WAV/MJPEG/MP4/WebP walks covered the other
@@ -474,7 +633,7 @@ object MediaKeys {
     // alternation on id%5==0, and a padding bit cycling by frame. The
     // oracle re-derives every field closed-form from the published
     // tables — a frame-length slip desyncs the walk and kills rows.
-    "p164_mp3_metadata" -> ((s, dir) => {
+    QueryKey("p164_mp3_metadata", Prepared, (s, dir) => {
       import s.implicits._
       val audio = docs(s, dir).select(col("doc_id")).as[Long]
         .mapPartitions(_.map { id =>
@@ -486,7 +645,17 @@ object MediaKeys {
             vbr = id % 5 == 0))
         }).toDF("id", "payload")
       Multimodal.mp3MetadataFrame(s, audio).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id AS id,
+  ([32,40,48,56,64,80,96,112,128,160,192,224,256,320])[
+    (1 + doc_id % 9)::INT]::BIGINT AS bitrate_kbps,
+  (doc_id % 5 = 0) AS is_vbr,
+  ([44100,48000,32000])[(doc_id % 3 + 1)::INT]::BIGINT AS sample_rate,
+  1::BIGINT AS channels,
+  (2 + doc_id % 7)::BIGINT AS n_frames,
+  ((2 + doc_id % 7) * 1152000
+    // ([44100,48000,32000])[(doc_id % 3 + 1)::INT])::BIGINT AS duration_ms
+FROM documents ORDER BY id""")),
 
     // P168 — subtitle/caption parsing (the text half of video-text
     // corpus curation: WebVTT and SRT carry the aligned transcripts
@@ -498,7 +667,7 @@ object MediaKeys {
     // suffix on the timing line) and SRT (index lines, comma
     // milliseconds); the id/index lines must NOT leak into the text.
     // Oracle re-derives every cue closed-form.
-    "p168_subtitles" -> ((s, dir) => {
+    QueryKey("p168_subtitles", Prepared, (s, dir) => {
       val id = col("doc_id")
       val j = col("j")
       val startMs = (id * 7 + j * 3) * 1000 + pmod(id, lit(1000))
@@ -532,7 +701,15 @@ object MediaKeys {
             concat(lit("WEBVTT\n\n"), col("cues")))
             .otherwise(col("cues")).as("body"))
       Subtitles.cues(body).orderBy("id", "cue_idx")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+c AS (SELECT doc_id, t.j FROM documents,
+        unnest(generate_series(0, doc_id % 4)) AS t(j)),
+e AS (SELECT doc_id AS id, j, (doc_id % 2 = 0) AS isvtt,
+        (doc_id*7 + j*3)*1000 + doc_id % 1000 AS sms FROM c)
+SELECT id, (j + CASE WHEN isvtt THEN 1 ELSE 0 END)::BIGINT AS cue_idx,
+  sms::BIGINT AS start_ms, (sms + 2000 + j*500)::BIGINT AS end_ms,
+  'line one of cue ' || j || ' and doc ' || id || ' line two' AS text
+FROM e ORDER BY id, cue_idx""")),
 
     // P167 — EXIF-orientation-normalized dedup (what p165's
     // orientation column is FOR: a phone photo stored rotated with
@@ -547,7 +724,8 @@ object MediaKeys {
     // by >= 80 gray levels, so single-JPEG DC error cannot flip a
     // bit — the pairing is exact by construction, not by tolerance.
     // Lanes cycle orientations 2/3/5/6/7/8 over the %3==2 docs.
-    "p167_exif_orientation" -> ((s, dir) => {
+    // Rebuild: materializes the hash self-join side (SelfJoinMaterialize).
+    QueryKey("p167_exif_orientation", Rebuild, (s, dir) => {
       import s.implicits._
       val lanes = Seq(2, 3, 5, 6, 7, 8)
       val imgs = docs(s, dir).select(col("doc_id")).as[Long]
@@ -565,7 +743,9 @@ object MediaKeys {
         }).toDF("id", "payload")
       Dedup.hammingPairs64(Multimodal.imageDHashes(s, normalized))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id * 10 AS id_a, doc_id * 10 + 1 AS id_b, 0::BIGINT AS hamming
+FROM documents WHERE doc_id % 3 = 2 ORDER BY id_a, id_b""")),
 
     // P166 — ID3v2 text frames (the audio twin of the EXIF walk:
     // title/artist/album are what audio-corpus curation joins on):
@@ -575,7 +755,7 @@ object MediaKeys {
     // BOM / UTF-16BE / UTF-8 by id%4); the tag rides in front of real
     // MPEG frames, so the p164 walk and this one read ONE payload.
     // Oracle: every field from the fixture formulas closed-form.
-    "p166_id3_tags" -> ((s, dir) => {
+    QueryKey("p166_id3_tags", Prepared, (s, dir) => {
       import s.implicits._
       val audio = docs(s, dir).select(col("doc_id")).as[Long]
         .mapPartitions(_.map { id =>
@@ -587,7 +767,11 @@ object MediaKeys {
             srIdx = 0))
         }).toDF("id", "payload")
       Multimodal.id3TagsFrame(s, audio).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id AS id, 'Track ' || doc_id AS title,
+  'Artist ' || (doc_id % 50) AS artist,
+  'Album ' || (doc_id % 20) AS album
+FROM documents ORDER BY id""")),
 
     // P165 — JPEG EXIF metadata (the columns image-corpus curation
     // filters and joins on — orientation for decode-free rotation
@@ -600,7 +784,7 @@ object MediaKeys {
     // decodes through imageio (APP1 is skippable), so metadata and
     // the dHash family read one artifact. Oracle: every field from
     // the fixture formulas closed-form.
-    "p165_jpeg_exif" -> ((s, dir) => {
+    QueryKey("p165_jpeg_exif", Prepared, (s, dir) => {
       import s.implicits._
       val imgs = docs(s, dir).select(col("doc_id")).as[Long]
         .mapPartitions(_.map { id =>
@@ -609,7 +793,13 @@ object MediaKeys {
             s"Cam${id % 5}", s"M${id % 7}", id % 2 == 0))
         }).toDF("id", "payload")
       Multimodal.jpegExifFrame(s, imgs).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id AS id, (1 + doc_id % 8)::BIGINT AS orientation,
+  '2026:08:' || lpad((1 + doc_id % 28)::VARCHAR, 2, '0') || ' '
+    || lpad((doc_id % 24)::VARCHAR, 2, '0') || ':00:00' AS datetime,
+  'Cam' || (doc_id % 5) AS make,
+  'M' || (doc_id % 7) AS model
+FROM documents ORDER BY id""")),
 
     // P163 — crawl-to-PDF-image composition (closes the loop the two
     // doors opened separately: p111 proved byte-exact binary transit
@@ -622,7 +812,8 @@ object MediaKeys {
     // pairs vanish — so hash-matching p161's oracle proves the whole
     // chain. Scale shape inherits all three parents': one task per
     // segment, payloads never cross a shuffle.
-    "p163_warc_pdf_images" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p163_warc_pdf_images", Rebuild, (s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-pdfimg-${dir.replaceAll("[^0-9.]", "")}"
@@ -657,7 +848,9 @@ object MediaKeys {
       Dedup.hammingPairs64(Multimodal.imageDHashes(s,
           standalone.unionByName(embedded)))
         .orderBy("id_a", "id_b")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id * 10 AS id_a, doc_id * 10 + 1 AS id_b, 0::BIGINT AS hamming
+FROM documents WHERE doc_id % 3 = 0 ORDER BY id_a, id_b""")),
 
     // P153 — PDF 1.5 cross-reference-stream trailers (the r17
     // verdict's missing-list #3: the normal Acrobat 7+ output has NO
@@ -671,7 +864,7 @@ object MediaKeys {
     // resolution, predictor decode, ObjStm expansion, and per-object
     // decryption all compose. Oracle: the closed-form CID re-typeset,
     // n_streams 4 (content + CMap + ObjStm + XRef).
-    "p153_pdf_xrefstream" -> ((s, dir) => {
+    QueryKey("p153_pdf_xrefstream", Prepared, (s, dir) => {
       import s.implicits._
       val pdfs = docs(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)]
@@ -684,7 +877,19 @@ object MediaKeys {
         })
         .toDF("id", "payload")
       Pdf.extractTexts(pdfs).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+e AS (SELECT doc_id,
+        'Doc ' || doc_id || ' (cid) A' || chr(10) || array_to_string(
+          [array_to_string(toks[k*10+1 : k*10+10], ' ')
+           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
+          chr(10)) AS text
+      FROM w)
+SELECT doc_id AS id, TRUE AS xref_ok, 4::BIGINT AS n_streams,
+  length(text)::BIGINT AS n_chars, text
+FROM e ORDER BY id""")),
 
     // P152 — WebP container metadata (the r17 verdict's #5:
     // javax.imageio is blind to WebP, so the web's now-dominant image
@@ -697,14 +902,26 @@ object MediaKeys {
     // dims). Pixel decode stays documented out (no pure-JDK VP8
     // path); exact-byte near-dup rides the content-hash family.
     // Oracle re-derives every field from the fixture's closed form.
-    "p152_webp_metadata" -> ((s, dir) => {
+    QueryKey("p152_webp_metadata", Prepared, (s, dir) => {
       import s.implicits._
       val imgs = docs(s, dir).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(id =>
           (id, Multimodal.generateWebp(id, (id % 4).toInt))))
         .toDF("id", "payload")
       Multimodal.webpMetadataFrame(s, imgs).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id AS id,
+  CASE doc_id % 4 WHEN 0 THEN 'vp8' WHEN 1 THEN 'vp8l'
+       ELSE 'vp8x' END AS format,
+  (16 + (doc_id * 7) % 240)::BIGINT AS width,
+  (16 + (doc_id * 13) % 180)::BIGINT AS height,
+  CASE WHEN doc_id % 4 = 0 THEN FALSE
+       WHEN doc_id % 4 = 2 THEN TRUE
+       ELSE doc_id % 3 = 0 END AS has_alpha,
+  doc_id % 4 = 3 AS is_animated,
+  (CASE WHEN doc_id % 4 = 3 THEN 2 + doc_id % 3 ELSE 0 END)::BIGINT
+    AS n_frames
+FROM documents ORDER BY id""")),
 
     // P129 — MP4/ISO-BMFF container metadata (the front half of video
     // curation: clip length, track layout, codec allowlist — filtered
@@ -713,26 +930,26 @@ object MediaKeys {
     // fixture MP4s, one row per track. The oracle re-derives brand,
     // exact-div durations, track layout, and sample counts from the
     // fixture arithmetic — a box-offset slip anywhere changes rows.
-    "p129_mp4_metadata" -> ((s, dir) => {
+    QueryKey("p129_mp4_metadata", Prepared, (s, dir) => {
       import s.implicits._
       val vids = docs(s, dir).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(d => (d, Mp4.fixtureMp4(d))))
         .toDF("id", "payload")
       Mp4.containerMeta(vids).orderBy("id", "track_id")
-    }),
+    }, oracle = Some(Mp4MetaOracle)),
 
     // P148 — 64-bit MP4 (the >4 GB capture shape): the SAME metadata
     // formula carried in version-1 mvhd/tkhd/mdhd (64-bit times), co64
     // offset boxes, and a size==1 LARGESIZE mdat — p129's oracle is
     // shared verbatim, so the v1 parse must agree with the v0 parse
     // row-for-row or the hash diverges.
-    "p148_mp4_64bit" -> ((s, dir) => {
+    QueryKey("p148_mp4_64bit", Prepared, (s, dir) => {
       import s.implicits._
       val vids = docs(s, dir).select(col("doc_id")).as[Long]
         .mapPartitions(_.map(d => (d, Mp4.fixtureMp4V1(d))))
         .toDF("id", "payload")
       Mp4.containerMeta(vids).orderBy("id", "track_id")
-    }),
+    }, oracle = Some(Mp4MetaOracle)),
 
     // P130 — crawl-to-video composition (p111's convention for the
     // mp4 door): the SAME fixture MP4s ride as BINARY response
@@ -740,7 +957,8 @@ object MediaKeys {
     // and the container walk runs on the RECOVERED body_bytes —
     // hash-matching p129's oracle proves byte-exact binary transit
     // into the video-curation front half.
-    "p130_warc_video" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p130_warc_video", Rebuild, (s, dir) => {
       import s.implicits._
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-mp4-${dir.replaceAll("[^0-9.]", "")}"
@@ -757,375 +975,6 @@ object MediaKeys {
             .cast("long").as("id"),
           col("body_bytes").as("payload"))
       Mp4.containerMeta(recovered).orderBy("id", "track_id")
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "p12_multimodal" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id,
-  CASE WHEN doc_id % 3 = 0 THEN 'image'
-       WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS modality,
-  octet_length(encode(text))::BIGINT AS byte_len,
-  (n_chars % 640 + 1)::INTEGER AS width,
-  (doc_id % 480 + 1)::INTEGER AS height,
-  (n_chars % 640 + 1)::BIGINT * (doc_id % 480 + 1)::BIGINT AS n_pixels,
-  md5(text) AS payload_hash
-FROM documents ORDER BY doc_id""",
-
-    "p47_video_mjpeg" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id,
-  (doc_id % 16 + 8)::INTEGER AS width,
-  (doc_id % 12 + 8)::INTEGER AS height,
-  (doc_id % 3 + 1)::BIGINT AS n_frames
-FROM documents WHERE doc_id < 60 ORDER BY doc_id""",
-
-    // p76: same enumeration contract as p74, audio variant rules %4/%6
-    "p76_audio_neardup" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-v AS (SELECT doc_id, 0 AS var FROM documents
-      UNION ALL SELECT doc_id, 1 FROM documents WHERE doc_id % 4 = 0
-      UNION ALL SELECT doc_id, 2 FROM documents WHERE doc_id % 6 = 0)
-SELECT a.doc_id * 10 + a.var AS id_a, b.doc_id * 10 + b.var AS id_b,
-  0::BIGINT AS hamming
-FROM v a JOIN v b ON a.doc_id = b.doc_id AND a.var < b.var
-ORDER BY id_a, id_b""",
-
-    // p77: same planted-pair enumeration as p74/p76 — every variant of
-    // one doc is fingerprint-identical by fixture construction (v1
-    // shares v0's frame bytes, v2 shares v0's decoded pixels), distinct
-    // docs never collide within hamming 3 (quasi-random 64-bit folds).
-    "p77_video_neardup" -> VideoNeardupPairsOracle,
-
-    // p142 SHARES p77's pair oracle: same (doc%5, variants on %10/%15)
-    // population, same ids, hamming 0 — but the fingerprints come from
-    // container-resolved KEYFRAME BYTES (stss/stsc/stco/stsz), no
-    // decoder, so the re-muxed variants prove byte-extent resolution
-    // instead of pixel decoding.
-    "p142_mp4_keyframe_neardup" -> VideoNeardupPairsOracle,
-
-    // p74: the planted near-dup pairs are enumerable from the doc table
-    // alone — every variant of one doc is dHash-identical by fixture
-    // construction (hamming 0) and distinct docs never pair (64
-    // formula-derived gradient bits). Missing rows = codec/hash/banding
-    // break; extra rows = an over-eager hash.
-    "p74_image_neardup" -> ImageNearDupOracle,
-
-    // p111 shares p74's ground truth: the SAME fixture rides through a
-    // binary-payload .warc.gz round-trip first, so any byte corruption
-    // in WARC framing/Content-Length slicing/gzip — or an eager UTF-8
-    // decode of the image body — surfaces as missing pairs.
-    "p111_warc_binary" -> ImageNearDupOracle,
-
-    // p118: the fixture PDF re-typeset in closed form — whitespace
-    // tokens in 10-token lines under the escape-bearing header line —
-    // never touching a PDF byte, so the whole generate → deflate →
-    // warc.gz → inflate → text-operator chain is checked end to end.
-    "p118_pdf_extract" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-e AS (SELECT doc_id,
-        'Doc ' || doc_id || ' (pdf) A' || chr(10) || array_to_string(
-          [array_to_string(toks[k*10+1 : k*10+10], ' ')
-           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
-          chr(10)) AS text
-      FROM w)
-SELECT doc_id AS id, TRUE AS xref_ok, 1::BIGINT AS n_streams,
-  length(text)::BIGINT AS n_chars, text
-FROM e ORDER BY id""",
-
-    // p146: p118's closed-form re-typeset verbatim — the SQL never
-    // sees a filter name or an encoded byte, so the AHx/A85 decode,
-    // the cascade order, and decrypt-before-decode must all be
-    // byte-exact for the text to match.
-    "p146_pdf_filters" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-e AS (SELECT doc_id,
-        'Doc ' || doc_id || ' (pdf) A' || chr(10) || array_to_string(
-          [array_to_string(toks[k*10+1 : k*10+10], ' ')
-           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
-          chr(10)) AS text
-      FROM w)
-SELECT doc_id AS id, TRUE AS xref_ok, 1::BIGINT AS n_streams,
-  length(text)::BIGINT AS n_chars, text
-FROM e ORDER BY id""",
-
-    // p149: p118's closed-form re-typeset verbatim — the SQL never
-    // sees a hash round or a key unwrap; both R5 and R6 must decrypt
-    // byte-exactly for the text to match.
-    "p149_pdf_aes256" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-e AS (SELECT doc_id,
-        'Doc ' || doc_id || ' (pdf) A' || chr(10) || array_to_string(
-          [array_to_string(toks[k*10+1 : k*10+10], ' ')
-           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
-          chr(10)) AS text
-      FROM w)
-SELECT doc_id AS id, TRUE AS xref_ok, 1::BIGINT AS n_streams,
-  length(text)::BIGINT AS n_chars, text
-FROM e ORDER BY id""",
-
-    // p147: p139's closed-form CID re-typeset with n_streams 3 — the
-    // SQL never sees an object stream, so expansion, pair-header
-    // parsing, and compressed-resident font resolution must all be
-    // byte-exact for the text to match.
-    "p147_pdf_objstm" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-e AS (SELECT doc_id,
-        'Doc ' || doc_id || ' (cid) A' || chr(10) || array_to_string(
-          [array_to_string(toks[k*10+1 : k*10+10], ' ')
-           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
-          chr(10)) AS text
-      FROM w)
-SELECT doc_id AS id, TRUE AS xref_ok, 3::BIGINT AS n_streams,
-  length(text)::BIGINT AS n_chars, text
-FROM e ORDER BY id""",
-
-    // p151: the closed-form re-typeset per predictor lane — classic
-    // layout for the three content-stream predictor shapes (doc_id %
-    // 4 in 0..2, header "(pdf)", 1 stream), the CID/ObjStm layout for
-    // the predicted object stream (lane 3, header "(cid)", 3
-    // streams). The SQL never sees a predictor, a row tag, or an
-    // ObjStm: any un-prediction slip yields no text (or garbage) and
-    // kills the match on a quarter of the rows.
-    "p151_pdf_predictor" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-e AS (SELECT doc_id,
-        'Doc ' || doc_id ||
-          CASE WHEN doc_id % 4 = 3 THEN ' (cid) A' ELSE ' (pdf) A' END ||
-          chr(10) || array_to_string(
-          [array_to_string(toks[k*10+1 : k*10+10], ' ')
-           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
-          chr(10)) AS text
-      FROM w)
-SELECT doc_id AS id, TRUE AS xref_ok,
-  (CASE WHEN doc_id % 4 = 3 THEN 3 ELSE 1 END)::BIGINT AS n_streams,
-  length(text)::BIGINT AS n_chars, text
-FROM e ORDER BY id""",
-
-    // p160: p151's closed form under %5 lanes — the LZW/RunLength
-    // transports must be invisible in the extracted text; lane 4 is
-    // the (cid) ObjStm re-typeset with n_streams 3.
-    "p160_pdf_lzw" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-e AS (SELECT doc_id,
-        'Doc ' || doc_id ||
-          CASE WHEN doc_id % 5 = 4 THEN ' (cid) A' ELSE ' (pdf) A' END ||
-          chr(10) || array_to_string(
-          [array_to_string(toks[k*10+1 : k*10+10], ' ')
-           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
-          chr(10)) AS text
-      FROM w)
-SELECT doc_id AS id, TRUE AS xref_ok,
-  (CASE WHEN doc_id % 5 = 4 THEN 3 ELSE 1 END)::BIGINT AS n_streams,
-  length(text)::BIGINT AS n_chars, text
-FROM e ORDER BY id""",
-
-    // p161: the cross-door pairs closed-form from the planting rule —
-    // identical bytes through two doors pair at hamming 0; a decode,
-    // cascade, or extraction slip on EITHER door loses its row.
-    "p161_pdf_images" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id * 10 AS id_a, doc_id * 10 + 1 AS id_b, 0::BIGINT AS hamming
-FROM documents WHERE doc_id % 3 = 0 ORDER BY id_a, id_b""",
-
-    // p164: every field re-derived from the published MPEG-1 Layer III
-    // tables and the fixture formulas — exact integer duration.
-    "p164_mp3_metadata" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id AS id,
-  ([32,40,48,56,64,80,96,112,128,160,192,224,256,320])[
-    (1 + doc_id % 9)::INT]::BIGINT AS bitrate_kbps,
-  (doc_id % 5 = 0) AS is_vbr,
-  ([44100,48000,32000])[(doc_id % 3 + 1)::INT]::BIGINT AS sample_rate,
-  1::BIGINT AS channels,
-  (2 + doc_id % 7)::BIGINT AS n_frames,
-  ((2 + doc_id % 7) * 1152000
-    // ([44100,48000,32000])[(doc_id % 3 + 1)::INT])::BIGINT AS duration_ms
-FROM documents ORDER BY id""",
-
-    // p168: every cue re-derived closed-form — a timestamp-decompose,
-    // settings-suffix, header-block, or id-line-leak slip diverges.
-    "p168_subtitles" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-c AS (SELECT doc_id, t.j FROM documents,
-        unnest(generate_series(0, doc_id % 4)) AS t(j)),
-e AS (SELECT doc_id AS id, j, (doc_id % 2 = 0) AS isvtt,
-        (doc_id*7 + j*3)*1000 + doc_id % 1000 AS sms FROM c)
-SELECT id, (j + CASE WHEN isvtt THEN 1 ELSE 0 END)::BIGINT AS cue_idx,
-  sms::BIGINT AS start_ms, (sms + 2000 + j*500)::BIGINT AS end_ms,
-  'line one of cue ' || j || ' and doc ' || id || ' line two' AS text
-FROM e ORDER BY id, cue_idx""",
-
-    // p167: each upright/rotated pair lands at hamming 0 — a
-    // transform-direction, dimension-swap, or EXIF-read slip breaks
-    // most rows (half the bits flip under a wrong rotation).
-    "p167_exif_orientation" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id * 10 AS id_a, doc_id * 10 + 1 AS id_b, 0::BIGINT AS hamming
-FROM documents WHERE doc_id % 3 = 2 ORDER BY id_a, id_b""",
-
-    // p166: the tag fields re-derived closed-form — a version-size,
-    // encoding, or frame-walk slip diverges rows.
-    "p166_id3_tags" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id AS id, 'Track ' || doc_id AS title,
-  'Artist ' || (doc_id % 50) AS artist,
-  'Album ' || (doc_id % 20) AS album
-FROM documents ORDER BY id""",
-
-    // p165: every EXIF field re-derived from the fixture formulas —
-    // a byte-order, offset-vs-inline, or IFD-geometry slip diverges.
-    "p165_jpeg_exif" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id AS id, (1 + doc_id % 8)::BIGINT AS orientation,
-  '2026:08:' || lpad((1 + doc_id % 28)::VARCHAR, 2, '0') || ' '
-    || lpad((doc_id % 24)::VARCHAR, 2, '0') || ':00:00' AS datetime,
-  'Cam' || (doc_id % 5) AS make,
-  'M' || (doc_id % 7) AS model
-FROM documents ORDER BY id""",
-
-    // p163: exactly p161's closed form — the WARC transit must be
-    // INVISIBLE (byte-exact binary round-trip), so the pair list is
-    // unchanged.
-    "p163_warc_pdf_images" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id * 10 AS id_a, doc_id * 10 + 1 AS id_b, 0::BIGINT AS hamming
-FROM documents WHERE doc_id % 3 = 0 ORDER BY id_a, id_b""",
-
-    // p162: p161's closed form on the %3==1 lane — lossless raw-sample
-    // decode means identical pixels through both doors, hamming 0.
-    "p162_pdf_image_raw" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id * 10 AS id_a, doc_id * 10 + 1 AS id_b, 0::BIGINT AS hamming
-FROM documents WHERE doc_id % 3 = 1 ORDER BY id_a, id_b""",
-
-    // p153: the closed-form CID re-typeset with n_streams 4 — the SQL
-    // never sees a trailer, an xref stream, a predictor, or a cipher,
-    // so /Encrypt-via-startxref resolution, /ID recovery, ObjStm
-    // expansion, and per-object decryption must all be byte-exact on
-    // the encrypted lanes for any text to come out.
-    "p153_pdf_xrefstream" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-e AS (SELECT doc_id,
-        'Doc ' || doc_id || ' (cid) A' || chr(10) || array_to_string(
-          [array_to_string(toks[k*10+1 : k*10+10], ' ')
-           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
-          chr(10)) AS text
-      FROM w)
-SELECT doc_id AS id, TRUE AS xref_ok, 4::BIGINT AS n_streams,
-  length(text)::BIGINT AS n_chars, text
-FROM e ORDER BY id""",
-
-    // p152: every field re-derived from the fixture formula — format
-    // from the lane, dims from the w/h closed form (canvas and
-    // bitstream agree by construction), alpha from lane rules (VP8
-    // never, VP8L the %3 bit, static VP8X always via flag+ALPH,
-    // animated VP8X the %3 bit), animation and ANMF count from lane 3.
-    "p152_webp_metadata" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id AS id,
-  CASE doc_id % 4 WHEN 0 THEN 'vp8' WHEN 1 THEN 'vp8l'
-       ELSE 'vp8x' END AS format,
-  (16 + (doc_id * 7) % 240)::BIGINT AS width,
-  (16 + (doc_id * 13) % 180)::BIGINT AS height,
-  CASE WHEN doc_id % 4 = 0 THEN FALSE
-       WHEN doc_id % 4 = 2 THEN TRUE
-       ELSE doc_id % 3 = 0 END AS has_alpha,
-  doc_id % 4 = 3 AS is_animated,
-  (CASE WHEN doc_id % 4 = 3 THEN 2 + doc_id % 3 ELSE 0 END)::BIGINT
-    AS n_frames
-FROM documents ORDER BY id""",
-
-    // p139: p118's closed-form re-typeset with the CID header — the
-    // SQL never sees a CID, a CMap, or a hex string, so the whole
-    // Type0 chain (font resolution → per-object CMap decrypt+inflate →
-    // bfchar/bfrange parse → 2-byte grouping → map application) must
-    // be byte-exact for the text to match. n_streams is 2 here: the
-    // content stream AND the ToUnicode CMap stream both ride the walk.
-    "p139_pdf_cid" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-e AS (SELECT doc_id,
-        'Doc ' || doc_id || ' (cid) A' || chr(10) || array_to_string(
-          [array_to_string(toks[k*10+1 : k*10+10], ' ')
-           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
-          chr(10)) AS text
-      FROM w)
-SELECT doc_id AS id, TRUE AS xref_ok, 2::BIGINT AS n_streams,
-  length(text)::BIGINT AS n_chars, text
-FROM e ORDER BY id""",
-
-    // p124: p118's closed-form PDF re-typeset composed with p09's
-    // quality formula — end-to-end over the extracted text.
-    "p124_pdf_pipeline" -> {
-      val stop = graft.functions.TextFunctions.DefaultStopwords("en")
-        .map("'" + _ + "'").mkString(", ")
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-e AS (SELECT doc_id,
-        'Doc ' || doc_id || ' (pdf) A' || chr(10) || array_to_string(
-          [array_to_string(toks[k*10+1 : k*10+10], ' ')
-           for k in range(0, CAST(ceil(len(toks)/10.0) AS BIGINT))],
-          chr(10)) AS text
-      FROM w),
-base AS (
-  SELECT doc_id AS id, length(text)::BIGINT AS n_chars,
-         string_split_regex(lower(trim(text)), '\\s+') AS t,
-         length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))::BIGINT AS punct
-  FROM e),
-m AS (
-  SELECT id, n_chars, len(t)::BIGINT AS n_tokens,
-    list_reduce([0]::BIGINT[] || list_transform(t, x -> length(x)::BIGINT),
-      (a,b) -> a+b)::DOUBLE / len(t)::DOUBLE AS mean_len,
-    punct::DOUBLE / n_chars::DOUBLE AS punct_ratio,
-    len(list_filter(t, x -> list_contains([$stop], x)))::DOUBLE / len(t)::DOUBLE
-      AS stop_ratio
-  FROM base)
-SELECT id, n_chars, n_tokens,
-  round(mean_len, 6) AS mean_token_len,
-  round(punct_ratio, 6) AS punct_ratio,
-  round(stop_ratio, 6) AS stopword_ratio,
-  round(GREATEST(0.0, 1.0 - abs(mean_len - 5.0) / 10.0 - punct_ratio * 2.0
-    + stop_ratio * 0.5), 6) AS quality_score
-FROM m ORDER BY id"""
-    },
-
-    // p129: track layout and durations from the fixture arithmetic —
-    // video n = id%50+10 at 25fps (40 ms/sample, media timescale
-    // 1000), audio n = id%30+5 on odd ids, movie duration follows the
-    // LONGER track through the timescale-600 round-trip. p130 is the
-    // SAME fixture recovered from a .warc.gz round-trip and shares the
-    // oracle (byte-exact binary transit, the p111 convention).
-    "p129_mp4_metadata" -> Mp4MetaOracle,
-    "p130_warc_video" -> Mp4MetaOracle,
-    // p148 SHARES it: version-1 boxes, co64, and largesize mdat must
-    // parse to the identical per-track rows (the 64-bit twin).
-    "p148_mp4_64bit" -> Mp4MetaOracle
+    }, oracle = Some(Mp4MetaOracle))
   )
 }

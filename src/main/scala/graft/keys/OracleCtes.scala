@@ -21,7 +21,7 @@ object OracleCtes {
   /** Oracle twin of the CDX index (shared by p93 batch and p110
    * streaming maintenance — matching hashes prove the stateless
    * append-mode index equals the batch build row for row). */
-  private[graft] val CdxOracle: String =
+  private[keys] val CdxOracle: String =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
 SELECT
   'com,example-' || (doc_id % 50) || ')/pg/' || doc_id || '?a=1&b=2' AS urlkey,
@@ -35,7 +35,7 @@ FROM documents ORDER BY urlkey"""
    * and p105 shard-merge — matching hashes prove register max-merge is
    * exact): same salted md5 codes, the generated 33-way trailing-zero
    * CASE, the same integer harmonic fold. */
-  private[graft] val HllShingleOracle: String = {
+  private[keys] val HllShingleOracle: String = {
     val whens = (1 to 32).map(k =>
       s"WHEN hr % ${1L << k} = ${1L << (k - 1)} THEN $k").mkString("\n      ")
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
@@ -56,7 +56,7 @@ SELECT 64::BIGINT AS m,
 FROM s"""
   }
 
-  private[graft] val LangIdOracle = {
+  private[keys] val LangIdOracle = {
     val langs = Seq("de", "en", "es", "fr")
     val hitExprs = langs.map { l =>
       val words = graft.functions.TextFunctions.DefaultStopwords(l)
@@ -82,7 +82,7 @@ FROM hits ORDER BY id"""
    * three spellings per page group all canonicalize to
    * example-{grp%50}.com/Pg/{grp}?a=1&b=2; keep = longest capture,
    * ties -> smallest doc_id. Any canonicalizer slip diverges rows. */
-  private[graft] val UrlDedupOracle =
+  private[keys] val UrlDedupOracle =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 d AS (SELECT doc_id, n_chars, doc_id // 3 AS grp FROM documents),
 r AS (SELECT *, row_number() OVER (PARTITION BY grp
@@ -101,7 +101,7 @@ ORDER BY canonical_url"""
    * cuts -> buckets) over whatever `tok(doc_id, lang, source, t)` CTE
    * the caller prefixes — the label-routed original (p72/p73) and the
    * PREDICTED-lang composition (p120) share every line after tok. */
-  private[graft] def perplexityOracleSql(prefixCtes: String): String =
+  private[keys] def perplexityOracleSql(prefixCtes: String): String =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 $prefixCtes,
 refcnt AS (SELECT lang AS l, tok, count(*)::BIGINT AS c
@@ -141,7 +141,7 @@ SELECT id, lang, score,
   score >= mc AS keep
 FROM scored JOIN cuts USING (lang) ORDER BY id"""
 
-  private[graft] val PerplexityOracle = perplexityOracleSql(
+  private[keys] val PerplexityOracle = perplexityOracleSql(
     s"""tok AS (SELECT doc_id, lang, source,
         string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents)""")
 
@@ -154,7 +154,7 @@ FROM scored JOIN cuts USING (lang) ORDER BY id"""
    * probabilities without a single division) -> doc-level plurality;
    * every tie alphabetical on both sides. Ends at
    * `pred(doc_id, gold, vote, nv, n_grams)`. */
-  private[graft] lazy val LangIdOracleCtes: String = {
+  private[keys] lazy val LangIdOracleCtes: String = {
     val langs = LangMarkers.map(_._1)
     val markerCase = "CASE lang " + LangMarkers.map { case (l, m) =>
       s"WHEN '$l' THEN '$m'" }.mkString(" ") + " ELSE '' END"
@@ -202,7 +202,7 @@ pred AS (SELECT rk.doc_id, rk.gold, rk.vote, rk.nv, ng.n_grams
          FROM rk JOIN ng USING (doc_id) WHERE rn = 1)"""
   }
 
-  private[graft] val DsirOracle =
+  private[keys] val DsirOracle =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 tok AS (SELECT doc_id, lang, string_split_regex(lower(trim(text)), '\\s+') AS t
         FROM documents),
@@ -234,7 +234,7 @@ SELECT doc_id AS id, n_grams, round(w, 6) AS dsir_weight
 FROM sel WHERE hm::DOUBLE < least(1.0, w * 0.25) * 1000003
 ORDER BY id"""
 
-  private[graft] val docCtes =
+  private[keys] val docCtes =
     s"""documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents),
 sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
@@ -243,7 +243,7 @@ sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
 
   /** Oracle twin of `incrementalFixture` (corpus/batch CTEs for p49 and
    * p51). */
-  private[graft] val IncrementalFixtureSql =
+  private[keys] val IncrementalFixtureSql =
     s"""documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 != 0),
 planted AS (SELECT b.doc_id,
@@ -254,28 +254,28 @@ planted AS (SELECT b.doc_id,
 batch AS (SELECT * FROM planted
   UNION ALL SELECT doc_id + 1000000, text FROM planted WHERE doc_id % 30 = 0)"""
 
-  private[graft] val embCte =
+  private[keys] val embCte =
     s"""emb AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
         FROM read_parquet('$Sf/embeddings.parquet'))"""
 
-  private[graft] val eventsCte =
+  private[keys] val eventsCte =
     s"""events AS (SELECT * FROM read_parquet('$Sf/events.parquet'))"""
 
   /** Ordered left-fold dot product of 1-indexed `dim`-length double lists —
    * bit-identical to VectorFunctions.dot (aggregate starts at 0.0, and
    * 0.0 + x == x for IEEE doubles). */
-  private[graft] def dotSql(a: String, b: String, dim: Int = 64): String =
+  private[keys] def dotSql(a: String, b: String, dim: Int = 64): String =
     s"list_reduce(list_transform(range(1,${dim + 1}), i -> $a[i] * $b[i]), (x,y) -> x+y)"
 
   /** Ordered-fold squared L2 between two 1-indexed `d`-length double
    * lists — bit-identical to Ann.l2Col (zip_with + seeded fold). */
-  private[graft] def l2Sql(a: String, b: String, d: Int = 8): String =
+  private[keys] def l2Sql(a: String, b: String, d: Int = 8): String =
     s"list_reduce([0.0]::DOUBLE[] || list_transform(range(1,${d + 1}), i -> ($a[i]-$b[i])*($a[i]-$b[i])), (x,y) -> x+y)"
 
   /** SQ8 range-training + encode + dequantize CTEs over `emb`, shared
    * by the p38 flat-scan and p44 IVF-composed oracles (CTE names are
    * sq-prefixed so they compose with the coarse-quantizer CTEs). */
-  private[graft] lazy val sqCtes: String =
+  private[keys] lazy val sqCtes: String =
     s"""sqsamp AS (SELECT vec_id, v FROM emb ORDER BY vec_id LIMIT 256),
 sqrng AS (SELECT d, min(v[d]) AS lo, max(v[d]) AS hi
         FROM sqsamp, range(1,65) r(d) GROUP BY d),
@@ -298,7 +298,7 @@ sqdeq AS (SELECT vec_id, list_transform(range(1,65), d ->
    * cosine with lowest-cid ties, id-ordered per-dimension mean folds,
    * emptied clusters keep their previous centroid), then full-corpus
    * assignment and each probe's nProbe=4 nearest lists. */
-  private[graft] lazy val ivfCoarseCtes: String = {
+  private[keys] lazy val ivfCoarseCtes: String = {
     def kmIter(i: Int): String = {
       val prev = s"c${i - 1}"
       s"""n${i - 1} AS (SELECT cid, cv, sqrt(${dotSql("cv", "cv")}) AS cn FROM $prev),
@@ -350,7 +350,7 @@ plists AS (
    * mean folds, emptied clusters keep their centroid). `src` is the
    * (vec_id, v) relation the sample is drawn from — `emb` for raw-vector
    * codebooks, a residual CTE for the IVFPQ residual variant. */
-  private[graft] def pqSubCtes(s: Int, src: String = "emb"): String = {
+  private[keys] def pqSubCtes(s: Int, src: String = "emb"): String = {
     val lo = s * 8 + 1
     val hi = s * 8 + 8
     def iter(i: Int): String =
@@ -376,7 +376,7 @@ cbl$s AS (SELECT list(cv ORDER BY cid) AS l FROM c${s}_2)"""
 
   /** Sign-LSH bucket over 8 hyperplanes from table `t` (plane index
    * t*8+j), mirroring VectorFunctions.lshBucket/hyperplane. */
-  private[graft] def bucketSql(v: String, t: String): String =
+  private[keys] def bucketSql(v: String, t: String): String =
     s"""list_sum(list_transform(range(0,8), j -> CASE WHEN
        list_reduce(list_transform(range(0,64), i ->
          $v[i+1] * ((((1103515245*((($t)*8+j)*64+i)+12345) % 2147483648) / 2147483648.0) - 0.5)),
@@ -385,7 +385,7 @@ cbl$s AS (SELECT list(cv ORDER BY cid) AS l FROM c${s}_2)"""
 
   /** The 16-entry MinHash signature list over distinct shingle codes
    * (a_i = 1000003 + 2i, b_i = 12345 + 97i mod 2^31-1). */
-  private[graft] def sigSql: String = {
+  private[keys] def sigSql: String = {
     val entries = (0 until 16).map { i =>
       val a = 1000003L + 2L * i
       val b = 12345L + 97L * i
@@ -397,7 +397,7 @@ cbl$s AS (SELECT list(cv ORDER BY cid) AS l FROM c${s}_2)"""
   /** Shared p114/p116 oracle CTEs: the fixture tables regenerated
    * cell-by-cell from the formula (never by parsing HTML), ending at
    * `u` = (id, table_idx, row_idx, n_cells, cells). */
-  private[graft] lazy val HtmlTablesOracleCtes: String =
+  private[keys] lazy val HtmlTablesOracleCtes: String =
     s"""documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 t1 AS (SELECT doc_id AS id, 0::BIGINT AS table_idx, r.r::BIGINT AS row_idx,
         (2 + doc_id % 2)::BIGINT AS n_cells,
@@ -430,7 +430,7 @@ u AS (SELECT * FROM t1 UNION ALL SELECT * FROM t2)"""
    * pretokenizer + byte-alphabet mapping — the training stages, the
    * replay fold, and the per-doc aggregation are shared verbatim, so
    * both rungs pin against ONE oracle semantics. */
-  private[graft] def bpeCtesFor(tokList: String): String = {
+  private[keys] def bpeCtesFor(tokList: String): String = {
     def stage(k: Int): String = {
       val prev = if (k == 1) "s0" else s"s${k - 1}"
       s"""p$k AS MATERIALIZED (SELECT (z).a AS a, (z).b AS b FROM (
@@ -471,7 +471,7 @@ per AS (SELECT doc_id, count(*)::BIGINT AS n_words,
         FROM encj GROUP BY doc_id)"""
   }
 
-  private[graft] lazy val BpeOracleCtes: String =
+  private[keys] lazy val BpeOracleCtes: String =
     bpeCtesFor("string_split_regex(lower(trim(text)), '\\s+')")
 
   /** Byte-level twin: the RE2-safe pretokenizer (case-sensitive,
@@ -480,7 +480,7 @@ per AS (SELECT doc_id, count(*)::BIGINT AS n_words,
    * [32,121]), so the only byte needing mapping is space → chr(288)
    * ('Ġ' — the GPT-2 table's image of 0x20); the engine side applies
    * the FULL 256-entry table and BpeSpec pins the non-ASCII rows. */
-  private[graft] lazy val BpeBytesOracleCtes: String = bpeCtesFor(
+  private[keys] lazy val BpeBytesOracleCtes: String = bpeCtesFor(
     "list_transform(regexp_extract_all(text, " +
       "'''s|''t|''re|''ve|''m|''ll|''d| ?\\p{L}+| ?\\p{N}+" +
       "| ?[^\\s\\p{L}\\p{N}]+|\\s+'), x -> replace(x, ' ', chr(288)))")
@@ -494,7 +494,7 @@ per AS (SELECT doc_id, count(*)::BIGINT AS n_words,
    * p142 (container-resolved MP4 keyframe-byte fingerprints): every
    * variant of one doc fingerprints identically by construction,
    * distinct docs never pair. */
-  private[graft] lazy val VideoNeardupPairsOracle: String =
+  private[keys] lazy val VideoNeardupPairsOracle: String =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 v AS (SELECT doc_id, 0 AS var FROM documents WHERE doc_id % 5 = 0
       UNION ALL SELECT doc_id, 1 FROM documents WHERE doc_id % 10 = 0
@@ -506,7 +506,7 @@ ORDER BY id_a, id_b"""
 
   /** Oracle shared by p129 (MP4 container walk) and p130 (the same
    * fixture through a .warc.gz binary round-trip). */
-  private[graft] lazy val Mp4MetaOracle: String =
+  private[keys] lazy val Mp4MetaOracle: String =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 b AS (SELECT doc_id, doc_id % 50 + 10 AS nv, doc_id % 30 + 5 AS na,
         doc_id % 2 = 1 AS aud FROM documents),
@@ -526,7 +526,7 @@ ORDER BY id, track_id"""
   /** Oracle shared by p122 (batch sitemap parse) and p126 (its
    * streaming drain): both entry populations regenerated closed-form
    * from the sitemapDocs fixture formula with the loc's &amp; DECODED. */
-  private[graft] lazy val SitemapsOracle: String =
+  private[keys] lazy val SitemapsOracle: String =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 u AS (SELECT doc_id, t.j FROM documents,
         unnest(generate_series(0, doc_id % 5)) AS t(j)
@@ -554,7 +554,7 @@ SELECT doc_id, 'sitemapindex', j,
 FROM i
 ORDER BY site, entry_idx"""
 
-  private[graft] lazy val ImageNearDupOracle: String =
+  private[keys] lazy val ImageNearDupOracle: String =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 v AS (SELECT doc_id, 0 AS var FROM documents
       UNION ALL SELECT doc_id, 1 FROM documents WHERE doc_id % 5 = 0
@@ -568,7 +568,7 @@ ORDER BY id_a, id_b"""
    * window dedup) and p58 (streaming aggregation dedup) both
    * hash-match this CTE chain (p32 line filter, p23 clean, p24
    * redact, p35 gopher, p01 dedup in production order). */
-  private[graft] lazy val CurationPipelineOracle: String =
+  private[keys] lazy val CurationPipelineOracle: String =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 planted AS (SELECT doc_id,
     CASE WHEN doc_id % 25 = 0 THEN '$PipeDupPlant' ELSE text || '.' END
@@ -621,7 +621,7 @@ FROM d WHERE rn = 1 ORDER BY id"""
 
   /** Shared by p43 (batch) and p45 (streaming drain of the same
    * fused line-filter->Gopher chain). */
-  private[graft] lazy val CurationChainOracle: String =
+  private[keys] lazy val CurationChainOracle: String =
     s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 planted AS (SELECT doc_id,
     text || '.' || chr(10) || 'short line' || chr(10) ||
@@ -661,7 +661,7 @@ FROM m ORDER BY id"""
   /** IVF top-k closed form, shared by p17 (batch) and p134 (streaming
    * serving drain): same trained coarse quantizer, same list
    * restriction, same exact ranking. */
-  private[graft] lazy val IvfTopKOracle: String =
+  private[keys] lazy val IvfTopKOracle: String =
     s"""WITH $embCte,
 $ivfCoarseCtes,
 scored AS (

@@ -10,49 +10,49 @@ import graft.operators._
  * the constants their oracles mirror. */
 object PipelineFixtures {
 
-  private[graft] val Sf = "/root/testdata/sf0.01"
-  private[graft] val HashMod = 2147483647L
+  private[keys] val Sf = "/root/testdata/sf0.01"
+  private[keys] val HashMod = 2147483647L
 
   /** Document-frequency cutoff for the registered Jaccard query: a shingle
    * appearing in more than this many documents is dropped before the
    * inverted-index self-join (skew guard; mirrored in the oracle CTE). */
-  private[graft] val MaxShingleFreq = 50L
+  private[keys] val MaxShingleFreq = 50L
 
   /** Duplicated-span window width (p36) and the planted shared run — a
    * 25-token sentence appended to every 3rd doc, long enough that its
    * interior holds 25−20+1 = 6 full windows per planted doc. Shared
    * between the Scala call and the oracle SQL. */
-  private[graft] val DupSpanW = 20
-  private[graft] val DupSpanPlant = "seventeen curious penguins watch from a " +
+  private[keys] val DupSpanW = 20
+  private[keys] val DupSpanPlant = "seventeen curious penguins watch from a " +
     "distant icy hill while ships sail slowly past the quiet harbor " +
     "under pale morning light carrying spices and silk"
 
   /** Shared passage for the CDC pairing fixture (p89): long enough to
    * contain several content-defined cut points, so docs embedding it at
    * DIFFERENT offsets still share its interior chunks. */
-  private[graft] val CdcPlant = (1 to 80).map(i => s"cdocs$i").mkString(" ")
+  private[keys] val CdcPlant = (1 to 80).map(i => s"cdocs$i").mkString(" ")
 
   /** p50's planted duplicate paragraph: one 56-word prose line ending in
    * terminal punctuation, so it passes the line filter AND the Gopher
    * thresholds (stop hits 'the'/'a', mean word len ~3.9, all-alpha) —
    * every 25th doc becomes this text and the final dedup stage collapses
    * the survivors to one keep-min-id row. */
-  private[graft] val PipeDupPlantRep = "the quick brown fox jumps over a lazy " +
+  private[keys] val PipeDupPlantRep = "the quick brown fox jumps over a lazy " +
     "dog near the river bank today"
-  private[graft] val PipeDupPlant =
+  private[keys] val PipeDupPlant =
     s"$PipeDupPlantRep $PipeDupPlantRep $PipeDupPlantRep $PipeDupPlantRep."
 
   /** BPE (p41) parameters, shared between the Scala call and the
    * oracle's generated merge-derivation CTE chain. */
-  private[graft] val BpeMerges = 12
-  private[graft] val BpeSampleN = 32
+  private[keys] val BpeMerges = 12
+  private[keys] val BpeSampleN = 32
 
   /** Stratified-sample (p20) parameters, shared between the Scala call and
    * the interpolated oracle SQL so the two can never silently diverge. */
-  private[graft] val SamplePerStratum = 40
-  private[graft] val SampleOverSample = 4
-  private[graft] val SampleHashMod = 1 << 20
-  private[graft] val DsirBuckets = 4096
+  private[keys] val SamplePerStratum = 40
+  private[keys] val SampleOverSample = 4
+  private[keys] val SampleHashMod = 1 << 20
+  private[keys] val DsirBuckets = 4096
 
   /** Trained-langid (p117/p120) parameters: bucket count plus the
    * per-language marker phrases the fixture appends (repeated
@@ -62,9 +62,9 @@ object PipelineFixtures {
    * fixture and the oracle's generated CASE so the two can never
    * silently diverge. ASCII-only (no quotes): the strings embed in
    * SQL literals and hash char-by-byte identically in both engines. */
-  private[graft] val LangIdBuckets = 4096
-  private[graft] val LangMarkerReps = 3
-  private[graft] val LangMarkers = Seq(
+  private[keys] val LangIdBuckets = 4096
+  private[keys] val LangMarkerReps = 3
+  private[keys] val LangMarkers = Seq(
     "de" -> " der schnelle braune fuchs springt ueber den faulen hund und laeuft weg",
     "en" -> " the quick brown fox jumps over the lazy dog and runs away with them",
     "es" -> " el zorro marron salta sobre el perro perezoso y corre lejos de aqui",
@@ -75,18 +75,18 @@ object PipelineFixtures {
    * the interpolated oracle SQL (weights render as a VALUES table).
    * The temperature variant (p40) uses a budget below the corpus's
    * total token mass so every stratum genuinely gets cut. */
-  private[graft] val MixTempTotalTokens = 15000L
-  private[graft] val MixWeights = Map("en" -> 0.5, "de" -> 0.2, "es" -> 0.2, "fr" -> 0.1)
-  private[graft] val MixTotalTokens = 50000L
-  private[graft] val MixOverSample = 4
+  private[keys] val MixTempTotalTokens = 15000L
+  private[keys] val MixWeights = Map("en" -> 0.5, "de" -> 0.2, "es" -> 0.2, "fr" -> 0.1)
+  private[keys] val MixTotalTokens = 50000L
+  private[keys] val MixOverSample = 4
 
   /** Epoch-capped mixture (p60) fixture: at sf0.01 token masses (en
    * ~11.8k, de ~3.5k, fr ~3.8k) these weights exercise every branch —
    * en: budget 10k < mass → 0 full epochs + partial cut; de: budget 10k
    * ≈ 2.8 epochs → 2 full + partial; fr: budget 30k ≈ 8 epochs → capped
    * at maxEpochs=4, no partial; es/zh: no weight → excluded. */
-  private[graft] val CapWeights = Map("en" -> 0.2, "de" -> 0.2, "fr" -> 0.6)
-  private[graft] val CapMaxEpochs = 4
+  private[keys] val CapWeights = Map("en" -> 0.2, "de" -> 0.2, "fr" -> 0.6)
+  private[keys] val CapMaxEpochs = 4
 
   /** Every stateful streaming operator instantiates one state store per
    * shuffle partition per micro-batch, so a small drain under the session
@@ -96,8 +96,8 @@ object PipelineFixtures {
    * session value afterward (queries run sequentially through the
    * registry, and AvailableNow terminates before the restore). A real
    * deployment sizes this once per stream in its SparkSession config. */
-  private[graft] val StreamShufflePartitions = 8
-  private[graft] def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
+  private[keys] val StreamShufflePartitions = 8
+  private[keys] def withStreamShuffle[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
     s.conf.set(key, StreamShufflePartitions.toString)
@@ -113,7 +113,7 @@ object PipelineFixtures {
    * is bounded by disk, not memory. Restored after the drain (same
    * discipline as withStreamShuffle; a real deployment sets this once
    * in session conf). */
-  private[graft] val RocksDbProvider =
+  private[keys] val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   /** Commit-cost tuning (r20, measured via StreamProbe durationMs): the
    * default RocksDB commit takes a FULL snapshot (checkpoint + zip +
@@ -127,12 +127,12 @@ object PipelineFixtures {
    * snapshot is untenable). trackTotalNumberOfRows=false drops the
    * get-per-put bookkeeping that exists only to report numRowsTotal —
    * metrics-only, results identical. Both restored after the drain. */
-  private[graft] val RocksDbTuning = Map(
+  private[keys] val RocksDbTuning = Map(
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
       -> "true",
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
       -> "false")
-  private[graft] def withRocksDbState[T](s: SparkSession)(body: => T): T = {
+  private[keys] def withRocksDbState[T](s: SparkSession)(body: => T): T = {
     val keys = "spark.sql.streaming.stateStore.providerClass" +:
       RocksDbTuning.keys.toSeq
     val prev = keys.map(k => k -> s.conf.getOption(k)).toMap
@@ -151,7 +151,7 @@ object PipelineFixtures {
    * Spread small inputs across the cluster before the compute-heavy
    * stages; a real 100 TB corpus has thousands of files and needs no
    * repartition (cores > input splits is a small-input artifact). */
-  private[graft] def spread(df: DataFrame): DataFrame = {
+  private[keys] def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     // inputFiles is driver-side metadata — unlike df.rdd.getNumPartitions
     // it does not force an RDD conversion per query build.
@@ -165,7 +165,7 @@ object PipelineFixtures {
    * symlink is re-created if it does not resolve to the requested file
    * (a stale key would silently stream the wrong dataset). Returns
    * (stream dir, tag for memory-sink query names). */
-  private[graft] def streamingSourceDir(dir: String, file: String): (String, String) = {
+  private[keys] def streamingSourceDir(dir: String, file: String): (String, String) = {
     import java.nio.file.{Files, Paths}
     val stem = file.takeWhile(_ != '.')
     val tag = java.security.MessageDigest.getInstance("MD5")
@@ -179,7 +179,7 @@ object PipelineFixtures {
     if (!Files.exists(link)) Files.createSymbolicLink(link, target)
     (streamDir.toString, tag)
   }
-  private[graft] def streamingDocsDir(dir: String): (String, String) =
+  private[keys] def streamingDocsDir(dir: String): (String, String) =
     streamingSourceDir(dir, "documents.parquet")
 
   /** Once-per-corpus streaming spool (r21, r20-verdict #5): the
@@ -195,7 +195,7 @@ object PipelineFixtures {
    * the sentinel lives BESIDE the spool so no file source ever lists it.
    * Bump `stem` when the export shape changes — a stale spool must never
    * masquerade as the new shape. */
-  private[graft] def spooledOnce(dir: String, stem: String)
+  private[keys] def spooledOnce(dir: String, stem: String)
                          (write: String => Unit): (String, String) = {
     import java.nio.file.{Files, Paths}
     val tag = java.security.MessageDigest.getInstance("MD5")
@@ -214,7 +214,7 @@ object PipelineFixtures {
    * files (written once per sf dir, reused after), so maxFilesPerTrigger=1
    * yields genuinely separate micro-batches — the fixture for drain modes
    * whose semantics only show across batches (p75's update mode). */
-  private[graft] def streamingDocsSplitDir(s: SparkSession, dir: String,
+  private[keys] def streamingDocsSplitDir(s: SparkSession, dir: String,
                                     parts: Int): (String, String) = {
     import java.nio.file.{Files, Paths}
     val tag = java.security.MessageDigest.getInstance("MD5")
@@ -236,14 +236,14 @@ object PipelineFixtures {
    * order irrelevant behind the memory sink's orderBy). Applied to the
    * streaming keys whose per-row work is heavy (p67 md5-per-bigram DSIR:
    * drain 4.8 -> 0.9 s at sf0.1; p58 fused stages; p73 vocab probes). */
-  private[graft] def spreadStream(df: DataFrame): DataFrame =
+  private[keys] def spreadStream(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Fold an update-mode memory sink to its final state (p75/p81):
    * keep each group's LAST update, identifiable because every emitted
    * update reflects at least one more member — its `n_dups` strictly
    * grows across a group's updates. */
-  private[graft] def foldUpdates(s: SparkSession, table: String,
+  private[keys] def foldUpdates(s: SparkSession, table: String,
                           keyCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCol).orderBy(col("n_dups").desc)
@@ -251,9 +251,9 @@ object PipelineFixtures {
       .where(col("__rn") === 1).drop("__rn")
   }
 
-  private[graft] def docs(s: SparkSession, dir: String): DataFrame =
+  private[keys] def docs(s: SparkSession, dir: String): DataFrame =
     spread(s.read.parquet(s"$dir/documents.parquet"))
-  private[graft] def embs(s: SparkSession, dir: String): DataFrame =
+  private[keys] def embs(s: SparkSession, dir: String): DataFrame =
     spread(s.read.parquet(s"$dir/embeddings.parquet"))
 
   /** Shared messy-URL fixture for the web keys (p78 batch, p81
@@ -263,7 +263,7 @@ object PipelineFixtures {
    * fragment) — all canonicalizing to
    * example-{grp%50}.com/Pg/{grp}?a=1&b=2. Pure projection, works on
    * batch and streaming frames. */
-  private[graft] def messyUrls(d: DataFrame): DataFrame = {
+  private[keys] def messyUrls(d: DataFrame): DataFrame = {
     val g = d.select(col("doc_id"), col("n_chars"))
       .withColumn("grp", expr("doc_id DIV 3"))
       .withColumn("h", pmod(col("grp"), lit(50)))
@@ -294,7 +294,7 @@ object PipelineFixtures {
    * get a 13-word slogan appended whose first token varies by id%3 —
    * eval ids 0,97,194,291,388,485 cover all three variants at sf0.01,
    * so every planted train doc finds a cross-split 13-gram match. */
-  private[graft] def decontamPlanted(d: DataFrame): DataFrame =
+  private[keys] def decontamPlanted(d: DataFrame): DataFrame =
     d.withColumn("text",
       when(pmod(col("doc_id"), lit(97)) === 0 ||
            pmod(col("doc_id"), lit(10)) === 3,
@@ -305,7 +305,7 @@ object PipelineFixtures {
 
   /** p117/p120 fixture: the documents table with the per-language
    * marker phrase appended (see LangMarkers). */
-  private[graft] def langMarked(d: DataFrame): DataFrame = {
+  private[keys] def langMarked(d: DataFrame): DataFrame = {
     val marker = LangMarkers.foldLeft(lit(""): org.apache.spark.sql.Column) {
       case (acc, (l, m)) => when(col("lang") === l, lit(m)).otherwise(acc)
     }
@@ -314,7 +314,7 @@ object PipelineFixtures {
 
   /** The langid model trained on the %5!=0 slice of the marked corpus
    * (shared by p117 and the p120 composition). */
-  private[graft] def langIdModelOf(d: DataFrame): TextAnalysis.LangIdModel =
+  private[keys] def langIdModelOf(d: DataFrame): TextAnalysis.LangIdModel =
     TextAnalysis.langIdTrain(
       d.where(pmod(col("doc_id"), lit(5)) =!= 0), buckets = LangIdBuckets)
 
@@ -323,7 +323,7 @@ object PipelineFixtures {
    * cell (1,1) carrying a trailing `&amp;x` entity — and docs %7==0 a
    * second 2x2 table; every cell's text is closed-form so the oracle
    * regenerates it without parsing HTML. */
-  private[graft] def tablePages(d: DataFrame): DataFrame = {
+  private[keys] def tablePages(d: DataFrame): DataFrame = {
     val id = col("doc_id")
     def table(prefix: String, nr: org.apache.spark.sql.Column, nc: org.apache.spark.sql.Column,
               cellMod: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
@@ -363,12 +363,12 @@ object PipelineFixtures {
   /** HTML-escape a text column for fixture pages — ORDER-SENSITIVE
    * ('&' must escape first); one copy for every fixture that embeds
    * doc text in markup (review-caught duplication). */
-  private[graft] def escHtml(c: org.apache.spark.sql.Column)
+  private[keys] def escHtml(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
     replace(replace(replace(c,
       lit("&"), lit("&amp;")), lit("<"), lit("&lt;")), lit(">"), lit("&gt;"))
 
-  private[graft] def htmlPages(d: DataFrame): DataFrame = {
+  private[keys] def htmlPages(d: DataFrame): DataFrame = {
     val esc = escHtml _
     val h = pmod(col("doc_id"), lit(50))
     val own = concat(lit("https://www.Example-"), h, lit(".com/Pg/"),
@@ -411,7 +411,7 @@ object PipelineFixtures {
    * noindex — must not count), else no meta — and three anchors:
    * a1 absolute (always followable), a2 rel=nofollow BEFORE href
    * (never followable), a3 rel AFTER href, nofollow only on %4==0. */
-  private[graft] def robotsPages(d: DataFrame): DataFrame = {
+  private[keys] def robotsPages(d: DataFrame): DataFrame = {
     val meta = when(pmod(col("doc_id"), lit(9)) === 0,
       lit("<meta name=\"robots\" content=\"noindex\">"))
       .when(pmod(col("doc_id"), lit(9)) === 1,
@@ -441,7 +441,7 @@ object PipelineFixtures {
    * per doc (unlike messyUrls' 3-docs-per-page), spelled messily by
    * doc_id%3 — all canonicalize to example-{id%50}.com/Pg/{id}?a=1&b=2
    * and SURT to com,example-{id%50})/pg/{id}?a=1&b=2. */
-  private[graft] def pageUrls(d: DataFrame): DataFrame = {
+  private[keys] def pageUrls(d: DataFrame): DataFrame = {
     val h = pmod(col("doc_id"), lit(50))
     d.withColumn("url",
       when(pmod(col("doc_id"), lit(3)) === 0,
@@ -461,7 +461,7 @@ object PipelineFixtures {
    * entry (lastmod on even j, changefreq on j%3==0, priority on odd j)
    * and a `&amp;`-escaped query in every loc, so entity decoding is
    * load-bearing in the oracle comparison. */
-  private[graft] def sitemapDocs(d: DataFrame): DataFrame = {
+  private[keys] def sitemapDocs(d: DataFrame): DataFrame = {
     val site = concat(lit("site"), pmod(col("doc_id"), lit(40)),
       lit(".example.com"))
     val freqs = Seq("always", "hourly", "daily", "weekly", "monthly",
@@ -505,7 +505,7 @@ object PipelineFixtures {
   /** p127's stopword list (jusText-style function words; the fixture
    * vocabulary carries 'a'/'the', the planted light-link paragraph the
    * rest). Shared verbatim by the oracle SQL. */
-  private[graft] val MainContentStopwords = Seq(
+  private[keys] val MainContentStopwords = Seq(
     "the", "a", "and", "for", "more", "of", "to", "in", "is", "on")
 
   /** p132 fixture: one robots.txt row per HOST, each advertising the
@@ -516,7 +516,7 @@ object PipelineFixtures {
    * to pin the case-insensitive match; a leading UA group makes the
    * file realistic (RFC 9309 §2.2.4: the directive is a non-group
    * record wherever it appears). Lines sort for determinism. */
-  private[graft] def robotsWithSitemaps(d: DataFrame): DataFrame = {
+  private[keys] def robotsWithSitemaps(d: DataFrame): DataFrame = {
     val h = pmod(col("doc_id"), lit(40))
     val line = concat(
       when(pmod(col("doc_id"), lit(2)) === 0, lit("Sitemap: "))
@@ -539,7 +539,7 @@ object PipelineFixtures {
    * a host's max site_id%3, exist here but must never be fetched), so
    * the pointer-driven semi-join is load-bearing. Each child carries
    * two url entries, priority on the second. */
-  private[graft] def childSitemapDocs(d: DataFrame): DataFrame = {
+  private[keys] def childSitemapDocs(d: DataFrame): DataFrame = {
     val ns = "http://www.sitemaps.org/schemas/sitemap/0.9"
     d.select(pmod(col("doc_id"), lit(40)).as("h")).distinct()
       .select(col("h"),
@@ -560,7 +560,7 @@ object PipelineFixtures {
   /** The p132/p136 composition: robots-discovered sitemaps parsed into
    * the per-host frontier (returns the robots frame too — p136 reads
    * its Crawl-delay directives). */
-  private[graft] def discoveredFrontier(d: DataFrame): (DataFrame, DataFrame) = {
+  private[keys] def discoveredFrontier(d: DataFrame): (DataFrame, DataFrame) = {
     val robots = robotsWithSitemaps(d)
     val discovered = UrlOps.robotsSitemaps(robots)
       .select(col("sitemap_url").as("__url")).distinct()
@@ -583,7 +583,7 @@ object PipelineFixtures {
    * light-link paragraph with an entity on %5 (must SURVIVE the
    * density screen), a link-heavy promo on %4 (must fail it), a short
    * footer (fails the length screen). */
-  private[graft] def contentPages(d: DataFrame): DataFrame = {
+  private[keys] def contentPages(d: DataFrame): DataFrame = {
     val toks = filter(split(trim(col("text")), "\\s+"), t => t =!= "")
     val nChunks = ceil(size(toks).cast("double") / lit(8.0)).cast("int")
     val paras = transform(sequence(lit(0), nChunks - 1),
@@ -610,7 +610,7 @@ object PipelineFixtures {
    * 1200-char minified-style line (fails the max-line screen),
    * doc_id%11==0 a generation-marker header (fails the autogen
    * screen) — both arms load-bearing in the oracle comparison. */
-  private[graft] def codeDocs(d: DataFrame): DataFrame = {
+  private[keys] def codeDocs(d: DataFrame): DataFrame = {
     val toks = filter(split(trim(col("text")), "\\s+"), t => t =!= "")
     val nChunks = ceil(size(toks).cast("double") / lit(7.0)).cast("int")
     val lines = transform(sequence(lit(0), nChunks - 1),
@@ -629,7 +629,7 @@ object PipelineFixtures {
    * user, assistant, user, assistant), mirrored token-for-token in
    * the oracle's list_slice arithmetic. Short docs yield short or
    * empty turn contents — both engines clamp slices identically. */
-  private[graft] def sftConvs(d: DataFrame): DataFrame = {
+  private[keys] def sftConvs(d: DataFrame): DataFrame = {
     import graft.functions.{TextFunctions => TF}
     val toks = TF.tokens(col("text"))
     def seg(start: Int, len: Int) =
@@ -649,7 +649,7 @@ object PipelineFixtures {
    * final dedup), lorem/braces drops (%10/%7), a PII line that survives
    * the line filter (%4), and the p43 line-filter fodder. Works on both
    * batch and streaming frames (pure projection). */
-  private[graft] def pipelinePlanted(d: DataFrame): DataFrame =
+  private[keys] def pipelinePlanted(d: DataFrame): DataFrame =
     d.select(col("doc_id"),
       concat(
         when(col("doc_id") % 25 === 0, lit(PipeDupPlant))
@@ -669,7 +669,7 @@ object PipelineFixtures {
    * doc's text replaced by its corpus neighbor (planted cross-corpus
    * dup) and every 30th re-appended under a shifted id (within-batch
    * dup). Mirrored verbatim in `IncrementalFixtureSql`. */
-  private[graft] def incrementalFixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private[keys] def incrementalFixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val d = docs(s, dir).select("doc_id", "text")
     val corpus = d.where(col("doc_id") % 3 =!= 0)
     val planted = d.where(col("doc_id") % 3 === 0).as("b")
@@ -686,10 +686,10 @@ object PipelineFixtures {
   /** Events reader with ts-unit auto-detection (the generator has
    * shipped both TIMESTAMP(NANOS) and TIMESTAMP_NTZ-micros across
    * rounds — see EventStream.normalizeTs). */
-  private[graft] def events(s: SparkSession, dir: String): DataFrame =
+  private[keys] def events(s: SparkSession, dir: String): DataFrame =
     graft.streaming.EventStream.readBatch(s, s"$dir/events.parquet")
 
-  private[graft] def probes(s: SparkSession, dir: String): DataFrame =
+  private[keys] def probes(s: SparkSession, dir: String): DataFrame =
     embs(s, dir).where(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_vec"))
 }

@@ -4,13 +4,14 @@ package keys
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import QueryKey.{Prepared, Rebuild}
 import PipelineFixtures._
 import OracleCtes._
 
 /** Structured Streaming keys: drains, windows and streaming twins. */
 object StreamingKeys {
 
-  private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[QueryKey] = Seq(
     // P15c/P22+, key p42_streaming_curation — the curation pre-pass as a
     // STREAM: clean → redact are stateless projections, so the exact
     // operator code runs under Structured Streaming unchanged. The key
@@ -18,7 +19,8 @@ object StreamingKeys {
     // through a file readStream into a memory sink with AvailableNow,
     // and must hash-match a BATCH-derived oracle — the strongest
     // statement that batch and streaming curation agree.
-    "p42_streaming_curation" -> ((s, dir) => {
+    // Rebuild: drains a file stream into a memory sink.
+    QueryKey("p42_streaming_curation", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val (streamDir, tag) = streamingDocsDir(dir)
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
@@ -36,7 +38,27 @@ object StreamingKeys {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       s.table(name).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+dirty AS (SELECT doc_id,
+    '  ' || text
+    || CASE WHEN doc_id % 10 = 0
+         THEN ' contact u' || doc_id || '@example.com or 555-123-4567 now'
+         ELSE '' END
+    || chr(9) || ' mid  gap ' || chr(7) || chr(7) || ' end  ' AS text
+  FROM documents),
+cl AS (SELECT doc_id, trim(regexp_replace(regexp_replace(text,
+    '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]', '', 'g'),
+    '\\s+', ' ', 'g')) AS ct
+  FROM dirty)
+SELECT doc_id AS id,
+  regexp_replace(regexp_replace(ct,
+    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+    '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS redacted_text,
+  len(regexp_extract_all(ct,
+    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))::BIGINT AS n_emails,
+  len(regexp_extract_all(ct,
+    '[0-9]{3}-[0-9]{3}-[0-9]{4}'))::BIGINT AS n_phones
+FROM cl ORDER BY id""")),
 
     // P29+P30 under Structured Streaming, key p45_streaming_gopher —
     // p42 proved clean→redact runs unchanged as a stream; this does the
@@ -45,7 +67,8 @@ object StreamingKeys {
     // documents table through a file readStream and must hash-match the
     // batch-derived oracle. Both stages are stateless projections, so
     // the micro-batch plan is the same single fused scan as batch.
-    "p45_streaming_gopher" -> ((s, dir) => {
+    // Rebuild: drains a file stream into a memory sink.
+    QueryKey("p45_streaming_gopher", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val (streamDir, tag) = streamingDocsDir(dir)
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
@@ -65,7 +88,7 @@ object StreamingKeys {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       s.table(name).orderBy("id")
-    }),
+    }, oracle = Some(CurationChainOracle)),
 
     // P15+/P1+++, key p53_streaming_incremental — the continual-refresh
     // frontier AS A STREAM: new documents arrive continuously and are
@@ -76,7 +99,8 @@ object StreamingKeys {
     // streaming, while corpus membership is order-free, so THIS is the
     // exactly-reproducible projection of p49 (same fixture, same
     // in_corpus values, hash-matched to a batch-derived oracle).
-    "p53_streaming_incremental" -> ((s, dir) => {
+    // Rebuild: drains a file stream into a memory sink.
+    QueryKey("p53_streaming_incremental", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val (streamDir, tag) = streamingDocsDir(dir)
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
@@ -103,7 +127,10 @@ object StreamingKeys {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       s.table(name).orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH $IncrementalFixtureSql,
+ch AS (SELECT DISTINCT md5(text) AS h FROM corpus)
+SELECT doc_id AS id, md5(text) IN (SELECT h FROM ch) AS in_corpus
+FROM batch ORDER BY id""")),
 
     // P15++/P22+++, key p58_streaming_pipeline — the WHOLE p50 curation
     // pipeline as a STREAM, closing the one stage p42/p45 couldn't
@@ -113,7 +140,8 @@ object StreamingKeys {
     // continuous-curation shape, update-mode state O(distinct hashes)).
     // Same planting, same batch oracle as p50: batch ≡ streaming for
     // the full five-stage pipeline, dedup included.
-    "p58_streaming_pipeline" -> ((s, dir) => {
+    // Rebuild: drains a file stream into a memory sink.
+    QueryKey("p58_streaming_pipeline", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val (streamDir, tag) = streamingDocsDir(dir)
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
@@ -128,7 +156,7 @@ object StreamingKeys {
         q.awaitTermination()
       } }
       s.table(name).orderBy("id")
-    }),
+    }, oracle = Some(CurationPipelineOracle)),
 
     // P78+, key p81_streaming_url_dedup — the crawl-frontier twin of
     // p78 (the p58/p67/p73/p75 batch≡streaming convention): captures
@@ -140,7 +168,8 @@ object StreamingKeys {
     // each group's last update, identifiable because an update always
     // reflects at least one more capture (n_dups strictly grows).
     // Hash-matches p78's batch oracle on the same corpus.
-    "p81_streaming_url_dedup" -> ((s, dir) => {
+    // Rebuild: drains a file stream into an update-mode memory sink.
+    QueryKey("p81_streaming_url_dedup", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val (streamDir, tag) = streamingDocsSplitDir(s, dir, parts = 2)
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
@@ -154,7 +183,7 @@ object StreamingKeys {
         q.awaitTermination()
       } }
       foldUpdates(s, name, "canonical_url").orderBy("canonical_url")
-    }),
+    }, oracle = Some(UrlDedupOracle)),
 
     // P106 — streaming sketch maintenance: the HLL registers are a
     // stateful streaming aggregation whose state is BOUNDED at m rows
@@ -162,7 +191,8 @@ object StreamingKeys {
     // honest shape here. Final registers must estimate BIT-IDENTICALLY
     // to the batch sketch: SHARES p103's oracle, completing the sketch
     // story (batch p103, shard-merge p105, streaming p106).
-    "p106_streaming_sketch" -> ((s, dir) => withStreamShuffle(s) {
+    // Rebuild: drains a file stream into a memory sink.
+    QueryKey("p106_streaming_sketch", Rebuild, (s, dir) => withStreamShuffle(s) {
       import org.apache.spark.sql.streaming.Trigger
       import graft.functions.{TextFunctions => TF}
       val (streamDir, tag) = streamingDocsDir(dir)
@@ -180,7 +210,7 @@ object StreamingKeys {
         .crossJoin(d.select(
           explode(TF.shingles(TF.tokens(col("text")), 3)).as("v"))
           .agg(countDistinct(col("v")).as("n_exact")))
-    }),
+    }, oracle = Some(HllShingleOracle)),
 
     // P110 — streaming CDX maintenance: a live crawl keeps its capture
     // index current as segments land — cdxIndex is a STATELESS
@@ -189,7 +219,8 @@ object StreamingKeys {
     // happens at publication (here: the table read). SHARES p93's
     // oracle — the streamed index must equal the batch index row for
     // row.
-    "p110_streaming_cdx" -> ((s, dir) => {
+    // Rebuild: drains the WARC stream into a memory sink.
+    QueryKey("p110_streaming_cdx", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import graft.sources.WarcSource
       // WARC segment spool is a pure function of the corpus — written
@@ -205,13 +236,14 @@ object StreamingKeys {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       s.table(name).orderBy("urlkey")
-    }),
+    }, oracle = Some(CdxOracle)),
 
     // P99 — streaming crawl ingest: WET segments arrive as a file
     // stream (the live-crawl shape), parse + language ID run
     // stateless per micro-batch. SHARES p08's oracle — the
     // batch ≡ streaming hash-match convention (p58/p67/p73).
-    "p99_streaming_wet" -> ((s, dir) => {
+    // Rebuild: drains the WET stream into a memory sink.
+    QueryKey("p99_streaming_wet", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       import graft.sources.WarcSource
       // once-per-corpus WET spool (r21, r20-verdict #5) — see p110
@@ -230,7 +262,7 @@ object StreamingKeys {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       s.table(name).orderBy("id")
-    }),
+    }, oracle = Some(LangIdOracle)),
 
     // P15+++/P22++++, key p75_streaming_update_dedup — p58's UPDATE-mode
     // drain twin: the continuous-pipeline shape. Complete mode re-emits
@@ -248,7 +280,8 @@ object StreamingKeys {
     // over batch volume in production); the folded state hash-matches
     // p50's batch oracle (StreamingSpec additionally pins multi-update
     // emission across 4 batches — the mode is exercised, not vacuous).
-    "p75_streaming_update_dedup" -> ((s, dir) => {
+    // Rebuild: drains a file stream into an update-mode memory sink.
+    QueryKey("p75_streaming_update_dedup", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val (streamDir, tag) = streamingDocsSplitDir(s, dir, parts = 2)
       val schema = s.read.parquet(s"$dir/documents.parquet").schema
@@ -264,7 +297,7 @@ object StreamingKeys {
         q.awaitTermination()
       } }
       foldUpdates(s, name, "content_hash").orderBy("id")
-    }),
+    }, oracle = Some(CurationPipelineOracle)),
 
     // P15+P19++ composition, key p67_streaming_dsir — DSIR under
     // Structured Streaming: the bucket models train BATCH-side (the
@@ -272,7 +305,8 @@ object StreamingKeys {
     // projection — stateless, literal artifacts — filters the document
     // STREAM unchanged. Hash-matches p63's batch oracle, like p42/p45
     // proved for the curation chains.
-    "p67_streaming_dsir" -> ((s, dir) => {
+    // Rebuild: trains the DSIR weights and drains a file stream.
+    QueryKey("p67_streaming_dsir", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val (streamDir, tag) = streamingDocsDir(dir)
       // train on the SPREAD batch read (docs) — the raw single-file read
@@ -289,7 +323,7 @@ object StreamingKeys {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       s.table(name).orderBy("id")
-    }),
+    }, oracle = Some(DsirOracle)),
 
     // P134 — STREAMING ANN serving (the one batch≡streaming family
     // member that was missing): the IVF index is trained and PUBLISHED
@@ -299,7 +333,8 @@ object StreamingKeys {
     // its own row plus the index — stateless stream-static shape; the
     // per-batch window ranks only that batch's probes). AvailableNow
     // drain hash-matches p17's oracle: train-once, serve-forever.
-    "p134_streaming_ann" -> ((s, dir) => {
+    // Rebuild: trains the coarse quantizer and drains a file stream.
+    QueryKey("p134_streaming_ann", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val tag = dir.replaceAll("[^0-9]", "_")
       val root = s"/root/repo/target/ann-serve-$tag"
@@ -323,14 +358,15 @@ object StreamingKeys {
         .start()
       q.awaitTermination()
       s.read.parquet(s"$root/served").orderBy("probe_id", "rank")
-    }),
+    }, oracle = Some(IvfTopKOracle)),
 
     // P126 — STREAMING sitemap ingest (sitemaps arrive with the crawl,
     // not before it): the same parse over a file stream of sitemap
     // documents, stateless append mode, Trigger.AvailableNow — shares
     // p122's oracle verbatim, so batch ≡ streaming is hash-proven (the
     // p99/p110 convention).
-    "p126_streaming_sitemaps" -> ((s, dir) => {
+    // Rebuild: drains the sitemap stream into a memory sink.
+    QueryKey("p126_streaming_sitemaps", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val sm = sitemapDocs(docs(s, dir))
       // once-per-corpus sitemap-doc spool (r21, r20-verdict #5) — see p110
@@ -344,7 +380,7 @@ object StreamingKeys {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       s.table(name).orderBy("site", "entry_idx")
-    }),
+    }, oracle = Some(SitemapsOracle)),
 
     // P15 — streaming ingest, driver-visible: the file-based streaming
     // source drained through the stateful gap-sessionizer into a memory
@@ -353,7 +389,8 @@ object StreamingKeys {
     // user's last — which is what the oracle mirrors (the timeout paths
     // are exercised e2e in StreamingSpec, where file arrival order is
     // controlled).
-    "p15_streaming" -> ((s, dir) => {
+    // Rebuild: drains the event stream into a memory sink.
+    QueryKey("p15_streaming", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
       // file streaming sources need a DIRECTORY; symlink the single file
       val (streamDir, tag) = streamingSourceDir(dir, "events.parquet")
@@ -376,14 +413,31 @@ object StreamingKeys {
         unix_micros(col("session_end")).as("end_us"),
         round(col("total_value"), 4).as("total_value"))
         .orderBy("user_id", "session_idx")
-    }),
+    }, oracle = Some(s"""WITH $eventsCte,
+e AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+      FROM events),
+f AS (SELECT *, CASE WHEN prev_ts IS NULL
+        OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
+        THEN 1 ELSE 0 END AS is_new FROM e),
+g AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        ROWS UNBOUNDED PRECEDING)::BIGINT AS session_idx FROM f),
+sess AS (
+  SELECT user_id, session_idx, count(*) AS n_events,
+    epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us,
+    round(sum(value), 4) AS total_value
+  FROM g GROUP BY user_id, session_idx)
+SELECT user_id, session_idx, n_events, start_us, end_us, total_value
+FROM (SELECT *, max(session_idx) OVER (PARTITION BY user_id) AS last_idx FROM sess)
+WHERE session_idx < last_idx
+ORDER BY user_id, session_idx""")),
 
     // P15b — the full streaming pipeline (watermarked event-id dedup →
     // tumbling windowed agg) in APPEND mode: only windows finalized by the
     // watermark emit (window_end <= max_event_time - delay), which the
     // oracle mirrors. n_users is HLL-approximate in streaming state and is
     // deliberately excluded from the compared columns.
-    "p18_streaming_windows" -> ((s, dir) => {
+    // Rebuild: drains the event stream into a memory sink.
+    QueryKey("p18_streaming_windows", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val (streamDir, tag) = streamingSourceDir(dir, "events.parquet")
       val stream = graft.streaming.EventStream.read(s, streamDir)
@@ -404,23 +458,46 @@ object StreamingKeys {
         unix_micros(col("window_start")).as("window_us"),
         col("event_type"), col("n_events"), col("total_value"))
         .orderBy("window_us", "event_type")
-    }),
+    }, oracle = Some(s"""WITH $eventsCte
+SELECT epoch_us(date_trunc('hour', ts)) AS window_us, event_type,
+  count(*) AS n_events, round(sum(value), 4) AS total_value
+FROM events GROUP BY 1, 2
+HAVING (window_us // 1000 + 3600000)
+  <= (SELECT epoch_us(max(ts)) // 1000 - 600000 FROM events)
+ORDER BY window_us, event_type""")),
 
     // P13 — gap-based sessionization (30 min).
-    "p13_sessionize" -> ((s, dir) =>
+    QueryKey("p13_sessionize", Prepared, (s, dir) =>
       Sessionize.sessions(events(s, dir), gapMinutes = 30)
         .select(col("user_id"), col("session_idx"), col("n_events"),
           unix_micros(col("session_start")).as("start_us"),
           unix_micros(col("session_end")).as("end_us"),
           col("total_value"))
-        .orderBy("user_id", "session_idx")),
+        .orderBy("user_id", "session_idx"),
+      oracle = Some(s"""WITH $eventsCte,
+e AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+      FROM events),
+f AS (SELECT *, CASE WHEN prev_ts IS NULL
+        OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
+        THEN 1 ELSE 0 END AS is_new FROM e),
+g AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        ROWS UNBOUNDED PRECEDING)::BIGINT AS session_idx FROM f)
+SELECT user_id, session_idx, count(*) AS n_events,
+  epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us,
+  round(sum(value), 4) AS total_value
+FROM g GROUP BY user_id, session_idx ORDER BY user_id, session_idx""")),
 
     // P14 — tumbling 1h window aggregation.
-    "p14_window_agg" -> ((s, dir) =>
+    QueryKey("p14_window_agg", Prepared, (s, dir) =>
       Sessionize.tumblingAgg(events(s, dir), widthMinutes = 60)
         .select(unix_micros(col("window_start")).as("window_us"),
           col("event_type"), col("n_events"), col("n_users"), col("total_value"))
-        .orderBy("window_us", "event_type")),
+        .orderBy("window_us", "event_type"),
+      oracle = Some(s"""WITH $eventsCte
+SELECT epoch_us(date_trunc('hour', ts)) AS window_us, event_type,
+  count(*) AS n_events, count(DISTINCT user_id) AS n_users,
+  round(sum(value), 4) AS total_value
+FROM events GROUP BY 1, 2 ORDER BY window_us, event_type""")),
 
     // P31++++++, key p73_streaming_perplexity — the CCNet filter's
     // continuous-ingestion shape: models + quantile cutoffs trained
@@ -429,7 +506,8 @@ object StreamingKeys {
     // AvailableNow. Shares p72's oracle — matching hashes prove the
     // frozen-model streaming path equals the batch self-quantile run
     // on the same corpus.
-    "p73_streaming_perplexity" -> ((s, dir) => {
+    // Rebuild: trains the perplexity model and drains a file stream.
+    QueryKey("p73_streaming_perplexity", Rebuild, (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val (streamDir, tag) = streamingDocsDir(dir)
       val batch = docs(s, dir)
@@ -443,116 +521,6 @@ object StreamingKeys {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       s.table(name).orderBy("id")
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    // p134: SHARES p17's oracle — the probe stream served against the
-    // published static index must land on EXACTLY the batch IVF rows
-    // (train-once/serve-forever, the p73/p67 batch ≡ streaming
-    // convention).
-    "p134_streaming_ann" -> IvfTopKOracle,
-
-    "p42_streaming_curation" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-dirty AS (SELECT doc_id,
-    '  ' || text
-    || CASE WHEN doc_id % 10 = 0
-         THEN ' contact u' || doc_id || '@example.com or 555-123-4567 now'
-         ELSE '' END
-    || chr(9) || ' mid  gap ' || chr(7) || chr(7) || ' end  ' AS text
-  FROM documents),
-cl AS (SELECT doc_id, trim(regexp_replace(regexp_replace(text,
-    '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f\\x7f]', '', 'g'),
-    '\\s+', ' ', 'g')) AS ct
-  FROM dirty)
-SELECT doc_id AS id,
-  regexp_replace(regexp_replace(ct,
-    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-    '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g') AS redacted_text,
-  len(regexp_extract_all(ct,
-    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))::BIGINT AS n_emails,
-  len(regexp_extract_all(ct,
-    '[0-9]{3}-[0-9]{3}-[0-9]{4}'))::BIGINT AS n_phones
-FROM cl ORDER BY id""",
-
-    "p53_streaming_incremental" ->
-      s"""WITH $IncrementalFixtureSql,
-ch AS (SELECT DISTINCT md5(text) AS h FROM corpus)
-SELECT doc_id AS id, md5(text) IN (SELECT h FROM ch) AS in_corpus
-FROM batch ORDER BY id""",
-    "p58_streaming_pipeline" -> CurationPipelineOracle,
-    // p75: the update-mode drain folds to the SAME final state
-    "p75_streaming_update_dedup" -> CurationPipelineOracle,
-    "p45_streaming_gopher" -> CurationChainOracle,
-    "p67_streaming_dsir" -> DsirOracle,
-    "p73_streaming_perplexity" -> PerplexityOracle,
-
-    // p99: the streaming twin of p91's ingest — identical hashes prove
-    // the file-stream parse + stateless scoring equals the batch path.
-    "p99_streaming_wet" -> LangIdOracle,
-
-    // p81 SHARES p78's oracle — matching hashes prove the update-mode
-    // streaming aggregation folded to the batch keep-best state on the
-    // same corpus (the p58/p67/p73/p75 batch≡streaming convention).
-    "p81_streaming_url_dedup" -> UrlDedupOracle,
-
-    // p110: SHARES p93's oracle — the streamed index must equal the
-    // batch index row for row (stateless append-mode maintenance).
-    "p110_streaming_cdx" -> CdxOracle,
-
-    // p106: SHARES p103's oracle — streaming register maintenance must
-    // land on the identical final sketch.
-    "p106_streaming_sketch" -> HllShingleOracle,
-    "p126_streaming_sitemaps" -> SitemapsOracle,
-
-    "p15_streaming" ->
-      s"""WITH $eventsCte,
-e AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events),
-f AS (SELECT *, CASE WHEN prev_ts IS NULL
-        OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-        THEN 1 ELSE 0 END AS is_new FROM e),
-g AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        ROWS UNBOUNDED PRECEDING)::BIGINT AS session_idx FROM f),
-sess AS (
-  SELECT user_id, session_idx, count(*) AS n_events,
-    epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us,
-    round(sum(value), 4) AS total_value
-  FROM g GROUP BY user_id, session_idx)
-SELECT user_id, session_idx, n_events, start_us, end_us, total_value
-FROM (SELECT *, max(session_idx) OVER (PARTITION BY user_id) AS last_idx FROM sess)
-WHERE session_idx < last_idx
-ORDER BY user_id, session_idx""",
-
-    "p13_sessionize" ->
-      s"""WITH $eventsCte,
-e AS (SELECT *, lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events),
-f AS (SELECT *, CASE WHEN prev_ts IS NULL
-        OR epoch_us(ts) - epoch_us(prev_ts) > 1800000000
-        THEN 1 ELSE 0 END AS is_new FROM e),
-g AS (SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        ROWS UNBOUNDED PRECEDING)::BIGINT AS session_idx FROM f)
-SELECT user_id, session_idx, count(*) AS n_events,
-  epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us,
-  round(sum(value), 4) AS total_value
-FROM g GROUP BY user_id, session_idx ORDER BY user_id, session_idx""",
-
-    "p18_streaming_windows" ->
-      s"""WITH $eventsCte
-SELECT epoch_us(date_trunc('hour', ts)) AS window_us, event_type,
-  count(*) AS n_events, round(sum(value), 4) AS total_value
-FROM events GROUP BY 1, 2
-HAVING (window_us // 1000 + 3600000)
-  <= (SELECT epoch_us(max(ts)) // 1000 - 600000 FROM events)
-ORDER BY window_us, event_type""",
-
-    "p14_window_agg" ->
-      s"""WITH $eventsCte
-SELECT epoch_us(date_trunc('hour', ts)) AS window_us, event_type,
-  count(*) AS n_events, count(DISTINCT user_id) AS n_users,
-  round(sum(value), 4) AS total_value
-FROM events GROUP BY 1, 2 ORDER BY window_us, event_type"""
+    }, oracle = Some(PerplexityOracle))
   )
 }

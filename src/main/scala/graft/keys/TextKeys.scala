@@ -4,289 +4,22 @@ package keys
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import QueryKey.{Prepared, Rebuild}
 import PipelineFixtures._
 import OracleCtes._
 
 /** Text analysis keys: language ID, quality, tokenization, LM ladders. */
 object TextKeys {
 
-  private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[QueryKey] = Seq(
     // P22, key p23_clean — text cleaning over deterministically dirtied
     // input (planted control chars + whitespace runs, mirrored in the
     // oracle) so the strip/collapse/trim path is actually exercised.
-    "p23_clean" -> ((s, dir) =>
+    QueryKey("p23_clean", Prepared, (s, dir) =>
       TextAnalysis.cleaned(docs(s, dir).withColumn("text",
         concat(lit("  "), col("text"), lit("\t mid  gap \u0007\u0007 end  "))))
-        .orderBy("id")),
-
-    // P23, key p24_redact — PII redaction over input with planted
-    // emails/phones on every 10th doc (mirrored in the oracle).
-    "p24_redact" -> ((s, dir) =>
-      TextAnalysis.redacted(docs(s, dir).withColumn("text",
-        when(col("doc_id") % 10 === 0,
-          concat(col("text"), lit(" contact u"), col("doc_id").cast("string"),
-            lit("@example.com or 555-123-4567 now")))
-          .otherwise(col("text"))))
-        .orderBy("id")),
-
-    // P24, key p25_repetition — Gopher-style top-n-gram repetition ratio.
-    "p25_repetition" -> ((s, dir) =>
-      TextAnalysis.repetition(docs(s, dir), n = 3).orderBy("id")),
-
-    // P29, key p32_c4_filter — C4-style line filtering over input with
-    // planted line structure (a too-short line + a passing prose line on
-    // every doc, placeholder text every 10th, a code line every 7th —
-    // mirrored in the oracle) so every rule actually fires.
-    "p32_c4_filter" -> ((s, dir) =>
-      TextAnalysis.lineFilter(docs(s, dir).withColumn("text",
-        concat(col("text"),
-          lit("\nshort line\nThis line has exactly enough words to pass."),
-          when(col("doc_id") % 10 === 0,
-            lit("\nlorem ipsum dolor sit amet consectetur.")).otherwise(lit("")),
-          when(col("doc_id") % 7 === 0,
-            lit("\nfunction() { var x = 1; }")).otherwise(lit("")))))
-        .orderBy("id")),
-
-    // P96 — Unicode confusable folding (ftfy-lite): the fixture wraps
-    // each doc in curly quotes and plants NBSP + em-dash + ZWSP +
-    // curly apostrophe + ellipsis; the oracle states the expected
-    // folded string in closed form, so a missed fold, a wrong fold
-    // order, or an over-eager class all diverge.
-    "p96_unicode_fold" -> ((s, dir) =>
-      TextAnalysis.unicodeFold(
-        docs(s, dir).withColumn("text", concat(lit("\u201C"), col("text"),
-          // \u201D NBSP em-dash ZWSP it's-with-curly-quote fine ellipsis
-          lit("\u201D\u00A0\u2014\u200Bit\u2019s fine\u2026"))))
-        .orderBy("id")),
-
-    // P97 — sentence segmentation: the planted paragraph exercises
-    // every rule branch — ". Then" splits, "3.14" (no whitespace)
-    // doesn't, "! Was" and "? Yes" split, ". the" (lowercase) doesn't,
-    // ". Tail" splits. The oracle enumerates the 5 expected sentences
-    // per doc in closed form.
-    "p97_sentences" -> ((s, dir) => {
-      import graft.functions.{TextFunctions => TF}
-      val intro = array_join(slice(TF.tokens(col("text")), 1, 2), " ")
-      TextAnalysis.sentences(
-        docs(s, dir).withColumn("text",
-          concat(lit("Intro about "), intro,
-            lit(". Then came 3.14 pies! Was it real? Yes. the trap " +
-              "stays. Tail"))))
-        .orderBy("id", "sent_idx")
-    }),
-
-    // P10+, key p41_bpe — real BPE subword tokenization: merges trained
-    // on the first 32 docs, corpus segmented by the native bpe_encode
-    // expression in one scan. The oracle re-derives the SAME merges as a
-    // 12-stage CTE chain (pair counting + left-greedy replace per
-    // stage), so both engines train AND encode identically.
-    "p41_bpe" -> ((s, dir) => {
-      val merges = Bpe.trainMerges(docs(s, dir), numMerges = BpeMerges,
-        sampleN = BpeSampleN)
-      Bpe.stats(docs(s, dir), merges).orderBy("id")
-    }),
-
-    // P141 — BYTE-level BPE (the GPT-2 lineage; p41 is the char-level
-    // rung): pretokens from the RE2-safe GPT-2-style pattern
-    // (case-sensitive, whitespace-significant, leading-space word
-    // units), their UTF-8 bytes mapped through the printable byte
-    // alphabet (space = 'Ġ'), merges trained on byte symbols with the
-    // SAME greedy trainer, corpus encoded by the SAME rank-heap native
-    // expression. Any UTF-8 input encodes with zero OOV; decode is
-    // exact (BpeSpec pins emoji/supplementary round-trips where
-    // char-level differs). The oracle replays training AND encoding in
-    // SQL through the shared parametrized CTE chain.
-    "p141_bpe_bytes" -> ((s, dir) => {
-      val merges = Bpe.trainMergesBytes(docs(s, dir), numMerges = BpeMerges,
-        sampleN = BpeSampleN)
-      Bpe.statsBytes(docs(s, dir), merges).orderBy("id")
-    }),
-
-    // P31, key p37_unigram — unigram-frequency quality scoring with a
-    // 24-entry vocabulary (the fixture generator draws from only 31
-    // distinct tokens; top-24 covers ~81% of token mass, so OOV is
-    // genuinely exercised on the rest).
-    "p37_unigram" -> ((s, dir) =>
-      TextAnalysis.unigramScore(docs(s, dir), vocabSize = 24).orderBy("id")),
-
-    // P31+, key p55_bigram — the bigram rung of the LM-quality ladder;
-    // small V (like p37) keeps the trained table tight and exercises OOV.
-    "p55_bigram" -> ((s, dir) =>
-      TextAnalysis.bigramScore(docs(s, dir), vocabSize = 24).orderBy("id")),
-
-    // P31++, key p56_trigram — the trigram rung (same ladder, same
-    // trained-artifact shape; docs need >= 3 tokens so the domain
-    // filter is exercised too).
-    "p56_trigram" -> ((s, dir) =>
-      TextAnalysis.trigramScore(docs(s, dir), vocabSize = 24).orderBy("id")),
-
-    // P31+++, key p57_backoff — KenLM-style stupid backoff (Brants et
-    // al. 2007): each trigram window scored by the longest trained
-    // context, alpha-discounted on fallback. The top LM-ladder rung.
-    "p57_backoff" -> ((s, dir) =>
-      TextAnalysis.backoffScore(docs(s, dir), vocabSize = 24).orderBy("id")),
-
-    // P31++++, key p69_interp — Jelinek-Mercer interpolated trigram
-    // scoring with deleted-interpolation LEARNED lambdas (the final
-    // LM-ladder rung; lambdas ride in the output so the oracle's
-    // re-derivation is hash-checked). On this fixture's templated text
-    // every top trigram's prefix is trigram-unique, so the held-out
-    // trigram estimate is 1.0 and the learning lands on the boundary
-    // lam3=1.0 — correct, and exactly what the learning should do
-    // here; the spec pins a mixed-lambda corpus (7/9, 2/9, 0).
-    "p69_interp" -> ((s, dir) =>
-      TextAnalysis.interpolatedScore(docs(s, dir), vocabSize = 512)
-        .orderBy("id")),
-
-    // P30, key p35_gopher — Gopher document-quality rules over input
-    // with planted rule-triggers (bullet lists every 8th doc, ellipsis
-    // lines every 9th, symbol spam every 10th — mirrored in the oracle);
-    // the multilingual fixture exercises the stopword/alpha/word-length
-    // rules naturally (zh docs tokenize as unsegmented runs). The
-    // required-stopword list is fixture-adapted ("the"/"a" — the only
-    // function words in the generator's vocabulary; the default
-    // GopherStopwords list would fail every doc), which is exactly what
-    // the parameter is for on a real non-English corpus.
-    "p35_gopher" -> ((s, dir) =>
-      TextAnalysis.gopherRules(docs(s, dir).withColumn("text",
-        concat(col("text"),
-          when(col("doc_id") % 8 === 0,
-            lit("\n- alpha\n- beta\n- gamma\n- delta")).otherwise(lit("")),
-          when(col("doc_id") % 9 === 0,
-            lit("\nto be continued...\nmore soon...")).otherwise(lit("")),
-          when(col("doc_id") % 10 === 0,
-            lit("\n# # # # # # # # # #")).otherwise(lit("")))),
-        stopwords = Seq("the", "a"))
-        .orderBy("id")),
-
-    // P11+, key p65_tfidf — per-document tf-idf keyword extraction
-    // (idf as the raw rarity ratio N/df — ranking-equivalent to the
-    // log form and bit-portable; top-5 terms per doc, term-asc ties).
-    "p65_tfidf" -> ((s, dir) =>
-      TextAnalysis.tfidfKeywords(docs(s, dir), k = 5).orderBy("id", "rank")),
-
-    // P8 — stopword-vote language ID.
-    "p08_langid" -> ((s, dir) =>
-      TextAnalysis.languageId(docs(s, dir)).orderBy("id")),
-
-    // P9 — quality scoring.
-    "p09_quality" -> ((s, dir) =>
-      TextAnalysis.quality(docs(s, dir)).orderBy("id")),
-
-    // P10 — token counting (whitespace + BPE-ish regex).
-    "p10_tokens" -> ((s, dir) =>
-      TextAnalysis.tokenCounts(docs(s, dir)).orderBy("id")),
-
-    // P11 — rolling-hash fingerprint + content hash.
-    "p11_fingerprint" -> ((s, dir) =>
-      TextAnalysis.fingerprints(docs(s, dir)).orderBy("id")),
-
-    // P115 — per-language tokenizer fertility under the p41-trained
-    // BPE: subwords per word and per character by language — the
-    // signal multilingual mixtures weigh languages by (a fixed token
-    // budget buys less text in high-fertility languages). One native
-    // encode scan + one lang-keyed aggregation; ratios after the sums.
-    "p115_token_fertility" -> ((s, dir) => {
-      val merges = Bpe.trainMerges(docs(s, dir), numMerges = BpeMerges,
-        sampleN = BpeSampleN)
-      Bpe.fertility(docs(s, dir), merges).orderBy("lang")
-    }),
-
-    // P144 — p115's fertility measurement re-run under the BYTE-level
-    // tokenizer (the verdict's re-measure ask): per-language sums of
-    // pretokens/subwords/BYTES under the p141-trained merges, ratios
-    // after the sums. Shares p141's oracle CTEs with one extra
-    // language aggregation — the two engines divide identical exact
-    // integers.
-    "p144_fertility_bytes" -> ((s, dir) => {
-      val merges = Bpe.trainMergesBytes(docs(s, dir), numMerges = BpeMerges,
-        sampleN = BpeSampleN)
-      Bpe.fertilityBytes(docs(s, dir), merges).orderBy("lang")
-    }),
-
-    // P117 — TRAINED char-n-gram language ID, p08's production
-    // successor: a per-language hashed 2-4-gram model trained on the
-    // labeled %5!=0 slice (ONE bounded (lang, bucket) aggregation →
-    // O(langs x buckets) literal artifact), applied to EVERY doc as a
-    // stateless narrow scan through the native langid_vote expression
-    // — per-gram likelihood argmax by exact integer cross-
-    // multiplication, doc-level plurality, both ties alphabetical, no
-    // floats anywhere (the dsir_score dodge, multiclass). The oracle
-    // re-derives counts, HUGEINT-product vote argmax, and the doc
-    // plurality from scratch; held-out docs (%5==0) are scored by a
-    // model that never saw them, so `correct` measures real
-    // generalization, not memorization.
-    "p117_langid_trained" -> ((s, dir) => {
-      val d = langMarked(docs(s, dir))
-      TextAnalysis.langIdApply(d, langIdModelOf(d), carry = Seq("lang"))
-        .select(col("id"), col("predicted_lang"),
-          col("lang").as("gold_lang"),
-          (col("predicted_lang") === col("lang")).as("correct"),
-          col("n_grams"), col("top_votes"))
-        .orderBy("id")
-    }),
-
-    // P120 — the composition the trained classifier exists for:
-    // CCNet-style per-language perplexity buckets (p72) where the
-    // language routing comes from the PREDICTED lang, not the gold
-    // label — the production shape (a real crawl has no labels). The
-    // prediction rides the same projection that feeds the LM stage
-    // (carry columns, no id re-join); p72's whole train-score-
-    // quantile-bucket chain then runs per PREDICTED language, and the
-    // oracle recomputes both stages end to end.
-    "p120_langid_perplexity" -> ((s, dir) => {
-      val d = langMarked(docs(s, dir))
-      val routed = TextAnalysis.langIdApply(d, langIdModelOf(d),
-        carry = Seq("text", "source"))
-        .select(col("id").as("doc_id"),
-          col("predicted_lang").as("lang"), col("text"), col("source"))
-      TextAnalysis.perplexityBuckets(routed,
-        refFilter = col("source").isin("src0", "src1", "src2", "src3", "src4"),
-        vocabSize = 24, headFrac = 0.3, keepFrac = 0.6).orderBy("id")
-    }),
-
-    // P123 — code-quality filters (Codex/StarCoder line-geometry
-    // screen): max/mean line length, alphanumeric density, and
-    // generation-marker scan over line-structured docs, exact integers
-    // only (div, basis points). The oracle REBUILDS the line-shaped
-    // fixture and recomputes every metric with SQL built-ins — a line
-    // split slip, a div slip, or a threshold slip changes rows.
-    "p123_code_quality" -> ((s, dir) =>
-      TextAnalysis.codeQuality(codeDocs(docs(s, dir))).orderBy("id")),
-
-    // P19+++++, key p70_quality_classifier — the DCLM/FineWeb-Edu
-    // supervised classifier step: a 20% seed slice (doc_id % 5 == 0) is
-    // LABELED by the Gopher verdict (the expensive judgment being
-    // distilled), a binary NB over hashed bigrams trains on it in one
-    // pass, and the FULL corpus is threshold-filtered by the trained
-    // model — train/apply generalization across different frames, which
-    // is what separates this from p63's self-referential resampling.
-    "p70_quality_classifier" -> ((s, dir) => {
-      val seed = docs(s, dir).where(col("doc_id") % 5 === 0)
-      val labeled = TextAnalysis.gopherRules(seed, stopwords = Seq("the", "a"),
-        passthrough = Seq("text"))
-      val model = Corpus.classifierTrain(labeled, isPositive = col("passes"),
-        buckets = DsirBuckets)
-      Corpus.classifierFilter(docs(s, dir), model, threshold = 1.0)
-        .orderBy("id")
-    }),
-
-    // P31+++++, key p72_perplexity_buckets — CCNet-style per-language
-    // perplexity bucketing (Wenzek et al. 2020): per-language unigram
-    // models trained on a trusted reference slice (sources src0-src4,
-    // the "Wikipedia" proxy), every doc scored with its own language's
-    // model, each language split head/middle/tail at the 30%/60%
-    // quantiles of the rounded score, keep = not tail. Small per-lang
-    // vocab (24) exercises OOV like the rest of the LM ladder.
-    "p72_perplexity_buckets" -> ((s, dir) =>
-      TextAnalysis.perplexityBuckets(docs(s, dir),
-        refFilter = col("source").isin("src0", "src1", "src2", "src3", "src4"),
-        vocabSize = 24, headFrac = 0.3, keepFrac = 0.6).orderBy("id"))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "p23_clean" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+        .orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 dirty AS (SELECT doc_id,
             '  ' || text || chr(9) || ' mid  gap ' || chr(7) || chr(7) || ' end  ' AS text
           FROM documents),
@@ -297,10 +30,18 @@ cl AS (SELECT doc_id, text,
        FROM dirty)
 SELECT doc_id AS id, clean_text,
        (length(text) - length(clean_text))::BIGINT AS n_chars_removed
-FROM cl ORDER BY id""",
+FROM cl ORDER BY id""")),
 
-    "p24_redact" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    // P23, key p24_redact — PII redaction over input with planted
+    // emails/phones on every 10th doc (mirrored in the oracle).
+    QueryKey("p24_redact", Prepared, (s, dir) =>
+      TextAnalysis.redacted(docs(s, dir).withColumn("text",
+        when(col("doc_id") % 10 === 0,
+          concat(col("text"), lit(" contact u"), col("doc_id").cast("string"),
+            lit("@example.com or 555-123-4567 now")))
+          .otherwise(col("text"))))
+        .orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 dirty AS (SELECT doc_id,
             CASE WHEN doc_id % 10 = 0
               THEN text || ' contact u' || doc_id || '@example.com or 555-123-4567 now'
@@ -313,10 +54,12 @@ SELECT doc_id AS id,
   len(regexp_extract_all(text,
     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))::BIGINT AS n_emails,
   len(regexp_extract_all(text, '[0-9]{3}-[0-9]{3}-[0-9]{4}'))::BIGINT AS n_phones
-FROM dirty ORDER BY id""",
+FROM dirty ORDER BY id""")),
 
-    "p25_repetition" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    // P24, key p25_repetition — Gopher-style top-n-gram repetition ratio.
+    QueryKey("p25_repetition", Prepared, (s, dir) =>
+      TextAnalysis.repetition(docs(s, dir), n = 3).orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 tokr AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents),
 shr AS (SELECT doc_id, list_transform(range(1, len(t)-1),
           i -> array_to_string(list_slice(t, i, i+2), ' ')) AS s
@@ -326,10 +69,22 @@ cnt AS (SELECT doc_id, shingle, count(*) AS c
         GROUP BY doc_id, shingle)
 SELECT doc_id AS id, sum(c)::BIGINT AS n_shingles, max(c)::BIGINT AS top_count,
        round(max(c)::DOUBLE / sum(c)::DOUBLE, 6) AS top_shingle_ratio
-FROM cnt GROUP BY doc_id ORDER BY id""",
+FROM cnt GROUP BY doc_id ORDER BY id""")),
 
-    "p32_c4_filter" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    // P29, key p32_c4_filter — C4-style line filtering over input with
+    // planted line structure (a too-short line + a passing prose line on
+    // every doc, placeholder text every 10th, a code line every 7th —
+    // mirrored in the oracle) so every rule actually fires.
+    QueryKey("p32_c4_filter", Prepared, (s, dir) =>
+      TextAnalysis.lineFilter(docs(s, dir).withColumn("text",
+        concat(col("text"),
+          lit("\nshort line\nThis line has exactly enough words to pass."),
+          when(col("doc_id") % 10 === 0,
+            lit("\nlorem ipsum dolor sit amet consectetur.")).otherwise(lit("")),
+          when(col("doc_id") % 7 === 0,
+            lit("\nfunction() { var x = 1; }")).otherwise(lit("")))))
+        .orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 planted AS (SELECT doc_id,
     text || chr(10) || 'short line' || chr(10) ||
     'This line has exactly enough words to pass.'
@@ -347,22 +102,87 @@ SELECT doc_id AS id, len(ls)::BIGINT AS n_lines, len(ks)::BIGINT AS n_kept,
   contains(lower(text), 'lorem ipsum') AS has_lorem,
   contains(text, '{') AS has_braces,
   array_to_string(ks, chr(10)) AS filtered_text
-FROM kx ORDER BY id""",
+FROM kx ORDER BY id""")),
 
+    // P96 — Unicode confusable folding (ftfy-lite): the fixture wraps
+    // each doc in curly quotes and plants NBSP + em-dash + ZWSP +
+    // curly apostrophe + ellipsis; the oracle states the expected
+    // folded string in closed form, so a missed fold, a wrong fold
+    // order, or an over-eager class all diverge.
+    QueryKey("p96_unicode_fold", Prepared, (s, dir) =>
+      TextAnalysis.unicodeFold(
+        docs(s, dir).withColumn("text", concat(lit("\u201C"), col("text"),
+          // \u201D NBSP em-dash ZWSP it's-with-curly-quote fine ellipsis
+          lit("\u201D\u00A0\u2014\u200Bit\u2019s fine\u2026"))))
+        .orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id AS id,
+  '"' || text || '" -it''s fine...' AS text_clean,
+  len('"' || text || '" -it''s fine...')::BIGINT AS n_chars_clean
+FROM documents ORDER BY id""")),
 
-    "p41_bpe" -> s"""WITH $BpeOracleCtes
+    // P97 — sentence segmentation: the planted paragraph exercises
+    // every rule branch — ". Then" splits, "3.14" (no whitespace)
+    // doesn't, "! Was" and "? Yes" split, ". the" (lowercase) doesn't,
+    // ". Tail" splits. The oracle enumerates the 5 expected sentences
+    // per doc in closed form.
+    QueryKey("p97_sentences", Prepared, (s, dir) => {
+      import graft.functions.{TextFunctions => TF}
+      val intro = array_join(slice(TF.tokens(col("text")), 1, 2), " ")
+      TextAnalysis.sentences(
+        docs(s, dir).withColumn("text",
+          concat(lit("Intro about "), intro,
+            lit(". Then came 3.14 pies! Was it real? Yes. the trap " +
+              "stays. Tail"))))
+        .orderBy("id", "sent_idx")
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+t AS (SELECT doc_id, coalesce(array_to_string(list_slice(
+        string_split_regex(lower(trim(text)), '\\s+'), 1, 2), ' '), '') AS seg
+      FROM documents),
+s AS (
+  SELECT doc_id, 0 AS sent_idx,
+         'Intro about ' || seg || '.' AS sentence FROM t
+  UNION ALL SELECT doc_id, 1, 'Then came 3.14 pies!' FROM t
+  UNION ALL SELECT doc_id, 2, 'Was it real?' FROM t
+  UNION ALL SELECT doc_id, 3, 'Yes. the trap stays.' FROM t
+  UNION ALL SELECT doc_id, 4, 'Tail' FROM t)
+SELECT doc_id AS id, sent_idx::BIGINT AS sent_idx, sentence
+FROM s ORDER BY id, sent_idx""")),
+
+    // P10+, key p41_bpe — real BPE subword tokenization: merges trained
+    // on the first 32 docs, corpus segmented by the native bpe_encode
+    // expression in one scan. The oracle re-derives the SAME merges as a
+    // 12-stage CTE chain (pair counting + left-greedy replace per
+    // stage), so both engines train AND encode identically.
+    // Rebuild: trains the BPE merges on the driver.
+    QueryKey("p41_bpe", Rebuild, (s, dir) => {
+      val merges = Bpe.trainMerges(docs(s, dir), numMerges = BpeMerges,
+        sampleN = BpeSampleN)
+      Bpe.stats(docs(s, dir), merges).orderBy("id")
+    }, oracle = Some(s"""WITH $BpeOracleCtes
 SELECT t.doc_id AS id, coalesce(per.n_words, 0)::BIGINT AS n_words,
   coalesce(per.n_subwords, 0)::BIGINT AS n_subwords,
   round(CASE WHEN coalesce(per.n_words, 0) > 0
     THEN per.n_subwords::DOUBLE / per.n_words ELSE 0.0 END, 6)
     AS subwords_per_word
-FROM tok t LEFT JOIN per USING (doc_id) ORDER BY id""",
+FROM tok t LEFT JOIN per USING (doc_id) ORDER BY id""")),
 
-    // p141: the byte-level chain through the SAME parametrized replay
-    // CTEs — pretokenizer, space→Ġ mapping, training stages, and the
-    // encode fold all re-derived in SQL; n_bytes is the mapped string's
-    // char length (one alphabet char per UTF-8 byte by construction).
-    "p141_bpe_bytes" -> s"""WITH $BpeBytesOracleCtes,
+    // P141 — BYTE-level BPE (the GPT-2 lineage; p41 is the char-level
+    // rung): pretokens from the RE2-safe GPT-2-style pattern
+    // (case-sensitive, whitespace-significant, leading-space word
+    // units), their UTF-8 bytes mapped through the printable byte
+    // alphabet (space = 'Ġ'), merges trained on byte symbols with the
+    // SAME greedy trainer, corpus encoded by the SAME rank-heap native
+    // expression. Any UTF-8 input encodes with zero OOV; decode is
+    // exact (BpeSpec pins emoji/supplementary round-trips where
+    // char-level differs). The oracle replays training AND encoding in
+    // SQL through the shared parametrized CTE chain.
+    // Rebuild: trains the byte-level BPE merges on the driver.
+    QueryKey("p141_bpe_bytes", Rebuild, (s, dir) => {
+      val merges = Bpe.trainMergesBytes(docs(s, dir), numMerges = BpeMerges,
+        sampleN = BpeSampleN)
+      Bpe.statsBytes(docs(s, dir), merges).orderBy("id")
+    }, oracle = Some(s"""WITH $BpeBytesOracleCtes,
 nb AS (SELECT doc_id,
          coalesce(list_sum(list_transform(ws, x -> length(x))), 0)::BIGINT
            AS n_bytes
@@ -376,58 +196,16 @@ SELECT t.doc_id AS id, coalesce(per.n_words, 0)::BIGINT AS n_pretokens,
     THEN per.n_subwords::DOUBLE / nb.n_bytes ELSE 0.0 END, 6)
     AS subwords_per_byte
 FROM tok t LEFT JOIN per USING (doc_id) JOIN nb USING (doc_id)
-ORDER BY id""",
+ORDER BY id""")),
 
-    // p144: p141's byte-level chain aggregated per language — the tok
-    // CTE already carries mapped pretokens whose char length IS the
-    // byte count, so n_bytes sums length(x) exactly like the Spark
-    // side's octet_length over raw pretokens.
-    "p144_fertility_bytes" -> s"""WITH $BpeBytesOracleCtes,
-nb AS (SELECT doc_id,
-         coalesce(list_sum(list_transform(ws, x -> length(x))), 0)::BIGINT
-           AS n_bytes
-       FROM tok),
-agg AS (SELECT d.lang, count(*) AS n_docs,
-          sum(coalesce(per.n_words, 0)) AS n_pretokens,
-          sum(coalesce(per.n_subwords, 0)) AS n_subwords,
-          sum(nb.n_bytes) AS n_bytes
-        FROM documents d
-        LEFT JOIN per ON d.doc_id = per.doc_id
-        JOIN nb ON d.doc_id = nb.doc_id
-        GROUP BY d.lang)
-SELECT lang, n_docs::BIGINT AS n_docs, n_pretokens::BIGINT AS n_pretokens,
-  n_subwords::BIGINT AS n_subwords, n_bytes::BIGINT AS n_bytes,
-  round(CASE WHEN n_pretokens > 0 THEN n_subwords::DOUBLE / n_pretokens
-    ELSE 0.0 END, 6) AS fertility_pretoken,
-  round(CASE WHEN n_bytes > 0 THEN n_subwords::DOUBLE / n_bytes
-    ELSE 0.0 END, 6) AS fertility_byte
-FROM agg ORDER BY lang""",
-
-    // p115: the SAME trained-BPE chain aggregated per language —
-    // ratios computed AFTER the language sums, exactly as the Spark
-    // side does, so the two engines divide identical exact integers.
-    "p115_token_fertility" -> s"""WITH $BpeOracleCtes,
-chars AS (SELECT doc_id,
-            coalesce(list_sum(list_transform(ws, x -> len(x))), 0)::BIGINT AS nc
-          FROM tok),
-agg AS (SELECT d.lang, count(*) AS n_docs,
-          sum(coalesce(per.n_words, 0)) AS n_words,
-          sum(coalesce(per.n_subwords, 0)) AS n_subwords,
-          sum(c.nc) AS n_chars
-        FROM documents d
-        LEFT JOIN per ON d.doc_id = per.doc_id
-        JOIN chars c ON d.doc_id = c.doc_id
-        GROUP BY d.lang)
-SELECT lang, n_docs::BIGINT AS n_docs, n_words::BIGINT AS n_words,
-  n_subwords::BIGINT AS n_subwords, n_chars::BIGINT AS n_chars,
-  round(CASE WHEN n_words > 0 THEN n_subwords::DOUBLE / n_words
-    ELSE 0.0 END, 6) AS fertility_word,
-  round(CASE WHEN n_chars > 0 THEN n_subwords::DOUBLE / n_chars
-    ELSE 0.0 END, 6) AS fertility_char
-FROM agg ORDER BY lang""",
-
-    "p37_unigram" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    // P31, key p37_unigram — unigram-frequency quality scoring with a
+    // 24-entry vocabulary (the fixture generator draws from only 31
+    // distinct tokens; top-24 covers ~81% of token mass, so OOV is
+    // genuinely exercised on the rest).
+    // Rebuild: trains the unigram vocabulary by a collect.
+    QueryKey("p37_unigram", Rebuild, (s, dir) =>
+      TextAnalysis.unigramScore(docs(s, dir), vocabSize = 24).orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
         FROM documents),
 cnt AS (SELECT tok, count(*)::BIGINT AS c
@@ -444,10 +222,14 @@ SELECT doc_id AS id, len(t)::BIGINT AS n_tokens,
   round(list_reduce([0.0]::DOUBLE[] ||
       list_transform(t, x -> coalesce(m[x][1], 0.0)), (a,b) -> a+b)
     / len(t), 9) AS avg_freq
-FROM tok, vm ORDER BY id""",
+FROM tok, vm ORDER BY id""")),
 
-    "p55_bigram" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    // P31+, key p55_bigram — the bigram rung of the LM-quality ladder;
+    // small V (like p37) keeps the trained table tight and exercises OOV.
+    // Rebuild: trains the bigram vocabulary by a collect.
+    QueryKey("p55_bigram", Rebuild, (s, dir) =>
+      TextAnalysis.bigramScore(docs(s, dir), vocabSize = 24).orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
         FROM documents),
 bg AS (SELECT doc_id, list_transform(range(1, len(t)),
@@ -467,10 +249,15 @@ SELECT doc_id AS id, len(gs)::BIGINT AS n_bigrams,
   round(list_reduce([0.0]::DOUBLE[] ||
       list_transform(gs, x -> coalesce(m[x][1], 0.0)), (a,b) -> a+b)
     / len(gs), 9) AS avg_freq
-FROM bg, vm ORDER BY id""",
+FROM bg, vm ORDER BY id""")),
 
-    "p56_trigram" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    // P31++, key p56_trigram — the trigram rung (same ladder, same
+    // trained-artifact shape; docs need >= 3 tokens so the domain
+    // filter is exercised too).
+    // Rebuild: trains the trigram vocabulary by a collect.
+    QueryKey("p56_trigram", Rebuild, (s, dir) =>
+      TextAnalysis.trigramScore(docs(s, dir), vocabSize = 24).orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
         FROM documents),
 tg AS (SELECT doc_id, list_transform(range(1, len(t) - 1),
@@ -490,16 +277,15 @@ SELECT doc_id AS id, len(gs)::BIGINT AS n_trigrams,
   round(list_reduce([0.0]::DOUBLE[] ||
       list_transform(gs, x -> coalesce(m[x][1], 0.0)), (a,b) -> a+b)
     / len(gs), 9) AS avg_freq
-FROM tg, vm ORDER BY id""",
+FROM tg, vm ORDER BY id""")),
 
-    // Stupid backoff: three vocab CTEs re-derive the trained tables with
-    // the engine's exact tie-break (count desc, gram asc, limit V); per
-    // window the CASE prefers trigram, then 0.5*bigram, then
-    // 0.25*unigram — 0.5/0.25 are exact doubles, so the products match
-    // the native expression bit-for-bit; the left fold adds 0.0 for OOV
-    // windows (no-op on the non-negative partial sums).
-    "p57_backoff" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    // P31+++, key p57_backoff — KenLM-style stupid backoff (Brants et
+    // al. 2007): each trigram window scored by the longest trained
+    // context, alpha-discounted on fallback. The top LM-ladder rung.
+    // Rebuild: trains the backoff model by collects.
+    QueryKey("p57_backoff", Rebuild, (s, dir) =>
+      TextAnalysis.backoffScore(docs(s, dir), vocabSize = 24).orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
         FROM documents),
 c1 AS (SELECT g, count(*)::BIGINT AS c
@@ -547,10 +333,21 @@ SELECT doc_id AS id, (len(t) - 2)::BIGINT AS n_windows,
   len(list_filter(tier, x -> x = 0))::BIGINT AS n_oov,
   round(list_reduce([0.0]::DOUBLE[] || fs, (a,b) -> a+b)
     / (len(t) - 2), 9) AS avg_score
-FROM sc ORDER BY id""",
+FROM sc ORDER BY id""")),
 
-    "p69_interp" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    // P31++++, key p69_interp — Jelinek-Mercer interpolated trigram
+    // scoring with deleted-interpolation LEARNED lambdas (the final
+    // LM-ladder rung; lambdas ride in the output so the oracle's
+    // re-derivation is hash-checked). On this fixture's templated text
+    // every top trigram's prefix is trigram-unique, so the held-out
+    // trigram estimate is 1.0 and the learning lands on the boundary
+    // lam3=1.0 — correct, and exactly what the learning should do
+    // here; the spec pins a mixed-lambda corpus (7/9, 2/9, 0).
+    // Rebuild: trains the interpolated model and its lambdas by collects.
+    QueryKey("p69_interp", Rebuild, (s, dir) =>
+      TextAnalysis.interpolatedScore(docs(s, dir), vocabSize = 512)
+        .orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 tok AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
         FROM documents),
 c1 AS (SELECT g, count(*)::BIGINT AS c
@@ -637,10 +434,29 @@ SELECT doc_id AS id, (len(t) - 2)::BIGINT AS n_windows,
   round((SELECT l3 FROM lam), 6) AS lam3,
   round((SELECT l2 FROM lam), 6) AS lam2,
   round((SELECT l1 FROM lam), 6) AS lam1
-FROM sc2 ORDER BY id""",
+FROM sc2 ORDER BY id""")),
 
-    "p35_gopher" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+    // P30, key p35_gopher — Gopher document-quality rules over input
+    // with planted rule-triggers (bullet lists every 8th doc, ellipsis
+    // lines every 9th, symbol spam every 10th — mirrored in the oracle);
+    // the multilingual fixture exercises the stopword/alpha/word-length
+    // rules naturally (zh docs tokenize as unsegmented runs). The
+    // required-stopword list is fixture-adapted ("the"/"a" — the only
+    // function words in the generator's vocabulary; the default
+    // GopherStopwords list would fail every doc), which is exactly what
+    // the parameter is for on a real non-English corpus.
+    QueryKey("p35_gopher", Prepared, (s, dir) =>
+      TextAnalysis.gopherRules(docs(s, dir).withColumn("text",
+        concat(col("text"),
+          when(col("doc_id") % 8 === 0,
+            lit("\n- alpha\n- beta\n- gamma\n- delta")).otherwise(lit("")),
+          when(col("doc_id") % 9 === 0,
+            lit("\nto be continued...\nmore soon...")).otherwise(lit("")),
+          when(col("doc_id") % 10 === 0,
+            lit("\n# # # # # # # # # #")).otherwise(lit("")))),
+        stopwords = Seq("the", "a"))
+        .orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 planted AS (SELECT doc_id, text
   || CASE WHEN doc_id % 8 = 0 THEN chr(10) || '- alpha' || chr(10) || '- beta'
        || chr(10) || '- gamma' || chr(10) || '- delta' ELSE '' END
@@ -668,17 +484,258 @@ SELECT doc_id AS id, n_words, round(mwl, 6) AS mean_word_len,
   (n_words BETWEEN 50 AND 100000 AND mwl BETWEEN 3.0 AND 10.0
    AND sym <= 0.1 AND bf <= 0.9 AND ef <= 0.3 AND af >= 0.8 AND sh >= 2)
     AS passes
-FROM m ORDER BY id""",
+FROM m ORDER BY id""")),
 
-    // p70 mirror notes: the seed labels re-derive the p35 gopher verdict
-    // (unplanted, the p62 CTE pattern) on the doc_id % 5 slice; the
-    // count CTE contrasts positive vs NEGATIVE (cn = count - cp, the
-    // classifierTrain re-basing), and the ratio is the NB likelihood
-    // ratio ((cp+1)*(tn+B)) / ((cn+1)*(tp+B)) — same exact-integer
-    // products and single division as DSIR, same ordered fold; the
-    // threshold compares the UNROUNDED mean, like the Scala filter.
-    "p70_quality_classifier" ->
+    // P11+, key p65_tfidf — per-document tf-idf keyword extraction
+    // (idf as the raw rarity ratio N/df — ranking-equivalent to the
+    // log form and bit-portable; top-5 terms per doc, term-asc ties).
+    // Rebuild: materializes the document frequencies (SelfJoinMaterialize).
+    QueryKey("p65_tfidf", Rebuild, (s, dir) =>
+      TextAnalysis.tfidfKeywords(docs(s, dir), k = 5).orderBy("id", "rank"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+tok AS (SELECT doc_id AS id,
+    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
+  FROM documents),
+tf AS (SELECT id, term, count(*)::BIGINT AS tf FROM tok
+       WHERE term <> '' GROUP BY id, term),
+df AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY term),
+nn AS (SELECT count(*)::BIGINT AS n FROM documents),
+sc AS (SELECT tf.id, tf.term, tf.tf, df.df,
+    tf.tf::DOUBLE * (nn.n::DOUBLE / df.df::DOUBLE) AS raw
+  FROM tf JOIN df USING (term) CROSS JOIN nn),
+r AS (SELECT id, term, tf, df, raw,
+    row_number() OVER (PARTITION BY id ORDER BY raw DESC, term ASC)::BIGINT
+      AS rank
+  FROM sc)
+SELECT id, rank, term, tf, df, round(raw, 6) AS tfidf
+FROM r WHERE rank <= 5 ORDER BY id, rank""")),
+
+    // P8 — stopword-vote language ID.
+    QueryKey("p08_langid", Prepared, (s, dir) =>
+      TextAnalysis.languageId(docs(s, dir)).orderBy("id"),
+      oracle = Some(LangIdOracle)),
+
+    // P9 — quality scoring.
+    QueryKey("p09_quality", Prepared, (s, dir) =>
+      TextAnalysis.quality(docs(s, dir)).orderBy("id"),
+      oracle = Some {
+      val stop = graft.functions.TextFunctions.DefaultStopwords("en")
+        .map("'" + _ + "'").mkString(", ")
       s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+base AS (
+  SELECT doc_id AS id, length(text)::BIGINT AS n_chars,
+         string_split_regex(lower(trim(text)), '\\s+') AS t,
+         length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))::BIGINT AS punct
+  FROM documents),
+m AS (
+  SELECT id, n_chars, len(t)::BIGINT AS n_tokens,
+    list_reduce([0]::BIGINT[] || list_transform(t, x -> length(x)::BIGINT),
+      (a,b) -> a+b)::DOUBLE / len(t)::DOUBLE AS mean_len,
+    punct::DOUBLE / n_chars::DOUBLE AS punct_ratio,
+    len(list_filter(t, x -> list_contains([$stop], x)))::DOUBLE / len(t)::DOUBLE
+      AS stop_ratio
+  FROM base)
+SELECT id, n_chars, n_tokens,
+  round(mean_len, 6) AS mean_token_len,
+  round(punct_ratio, 6) AS punct_ratio,
+  round(stop_ratio, 6) AS stopword_ratio,
+  round(GREATEST(0.0, 1.0 - abs(mean_len - 5.0) / 10.0 - punct_ratio * 2.0
+    + stop_ratio * 0.5), 6) AS quality_score
+FROM m ORDER BY id"""
+    }),
+
+    // P10 — token counting (whitespace + BPE-ish regex).
+    QueryKey("p10_tokens", Prepared, (s, dir) =>
+      TextAnalysis.tokenCounts(docs(s, dir)).orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id AS id,
+  len(string_split_regex(lower(trim(text)), '\\s+'))::BIGINT AS ws_tokens,
+  len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\\s]'))::BIGINT AS bpe_tokens
+FROM documents ORDER BY id""")),
+
+    // P11 — rolling-hash fingerprint + content hash.
+    QueryKey("p11_fingerprint", Prepared, (s, dir) =>
+      TextAnalysis.fingerprints(docs(s, dir)).orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+toks AS (SELECT doc_id, text, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents)
+SELECT doc_id AS id,
+  list_reduce([0]::BIGINT[] ||
+    list_transform(t, x -> ('0x' || substring(md5(x),1,8))::BIGINT),
+    (a,b) -> (a*131 + b % $HashMod) % $HashMod) AS fingerprint,
+  md5(text) AS content_hash
+FROM toks ORDER BY id""")),
+
+    // P115 — per-language tokenizer fertility under the p41-trained
+    // BPE: subwords per word and per character by language — the
+    // signal multilingual mixtures weigh languages by (a fixed token
+    // budget buys less text in high-fertility languages). One native
+    // encode scan + one lang-keyed aggregation; ratios after the sums.
+    // Rebuild: trains the BPE merges on the driver.
+    QueryKey("p115_token_fertility", Rebuild, (s, dir) => {
+      val merges = Bpe.trainMerges(docs(s, dir), numMerges = BpeMerges,
+        sampleN = BpeSampleN)
+      Bpe.fertility(docs(s, dir), merges).orderBy("lang")
+    }, oracle = Some(s"""WITH $BpeOracleCtes,
+chars AS (SELECT doc_id,
+            coalesce(list_sum(list_transform(ws, x -> len(x))), 0)::BIGINT AS nc
+          FROM tok),
+agg AS (SELECT d.lang, count(*) AS n_docs,
+          sum(coalesce(per.n_words, 0)) AS n_words,
+          sum(coalesce(per.n_subwords, 0)) AS n_subwords,
+          sum(c.nc) AS n_chars
+        FROM documents d
+        LEFT JOIN per ON d.doc_id = per.doc_id
+        JOIN chars c ON d.doc_id = c.doc_id
+        GROUP BY d.lang)
+SELECT lang, n_docs::BIGINT AS n_docs, n_words::BIGINT AS n_words,
+  n_subwords::BIGINT AS n_subwords, n_chars::BIGINT AS n_chars,
+  round(CASE WHEN n_words > 0 THEN n_subwords::DOUBLE / n_words
+    ELSE 0.0 END, 6) AS fertility_word,
+  round(CASE WHEN n_chars > 0 THEN n_subwords::DOUBLE / n_chars
+    ELSE 0.0 END, 6) AS fertility_char
+FROM agg ORDER BY lang""")),
+
+    // P144 — p115's fertility measurement re-run under the BYTE-level
+    // tokenizer (the verdict's re-measure ask): per-language sums of
+    // pretokens/subwords/BYTES under the p141-trained merges, ratios
+    // after the sums. Shares p141's oracle CTEs with one extra
+    // language aggregation — the two engines divide identical exact
+    // integers.
+    // Rebuild: trains the byte-level BPE merges on the driver.
+    QueryKey("p144_fertility_bytes", Rebuild, (s, dir) => {
+      val merges = Bpe.trainMergesBytes(docs(s, dir), numMerges = BpeMerges,
+        sampleN = BpeSampleN)
+      Bpe.fertilityBytes(docs(s, dir), merges).orderBy("lang")
+    }, oracle = Some(s"""WITH $BpeBytesOracleCtes,
+nb AS (SELECT doc_id,
+         coalesce(list_sum(list_transform(ws, x -> length(x))), 0)::BIGINT
+           AS n_bytes
+       FROM tok),
+agg AS (SELECT d.lang, count(*) AS n_docs,
+          sum(coalesce(per.n_words, 0)) AS n_pretokens,
+          sum(coalesce(per.n_subwords, 0)) AS n_subwords,
+          sum(nb.n_bytes) AS n_bytes
+        FROM documents d
+        LEFT JOIN per ON d.doc_id = per.doc_id
+        JOIN nb ON d.doc_id = nb.doc_id
+        GROUP BY d.lang)
+SELECT lang, n_docs::BIGINT AS n_docs, n_pretokens::BIGINT AS n_pretokens,
+  n_subwords::BIGINT AS n_subwords, n_bytes::BIGINT AS n_bytes,
+  round(CASE WHEN n_pretokens > 0 THEN n_subwords::DOUBLE / n_pretokens
+    ELSE 0.0 END, 6) AS fertility_pretoken,
+  round(CASE WHEN n_bytes > 0 THEN n_subwords::DOUBLE / n_bytes
+    ELSE 0.0 END, 6) AS fertility_byte
+FROM agg ORDER BY lang""")),
+
+    // P117 — TRAINED char-n-gram language ID, p08's production
+    // successor: a per-language hashed 2-4-gram model trained on the
+    // labeled %5!=0 slice (ONE bounded (lang, bucket) aggregation →
+    // O(langs x buckets) literal artifact), applied to EVERY doc as a
+    // stateless narrow scan through the native langid_vote expression
+    // — per-gram likelihood argmax by exact integer cross-
+    // multiplication, doc-level plurality, both ties alphabetical, no
+    // floats anywhere (the dsir_score dodge, multiclass). The oracle
+    // re-derives counts, HUGEINT-product vote argmax, and the doc
+    // plurality from scratch; held-out docs (%5==0) are scored by a
+    // model that never saw them, so `correct` measures real
+    // generalization, not memorization.
+    // Rebuild: trains the language-ID model by a collect.
+    QueryKey("p117_langid_trained", Rebuild, (s, dir) => {
+      val d = langMarked(docs(s, dir))
+      TextAnalysis.langIdApply(d, langIdModelOf(d), carry = Seq("lang"))
+        .select(col("id"), col("predicted_lang"),
+          col("lang").as("gold_lang"),
+          (col("predicted_lang") === col("lang")).as("correct"),
+          col("n_grams"), col("top_votes"))
+        .orderBy("id")
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+$LangIdOracleCtes
+SELECT doc_id AS id, vote AS predicted_lang, gold AS gold_lang,
+  vote = gold AS correct, n_grams, nv AS top_votes
+FROM pred ORDER BY id""")),
+
+    // P120 — the composition the trained classifier exists for:
+    // CCNet-style per-language perplexity buckets (p72) where the
+    // language routing comes from the PREDICTED lang, not the gold
+    // label — the production shape (a real crawl has no labels). The
+    // prediction rides the same projection that feeds the LM stage
+    // (carry columns, no id re-join); p72's whole train-score-
+    // quantile-bucket chain then runs per PREDICTED language, and the
+    // oracle recomputes both stages end to end.
+    // Rebuild: trains the language-ID and perplexity models by collects.
+    QueryKey("p120_langid_perplexity", Rebuild, (s, dir) => {
+      val d = langMarked(docs(s, dir))
+      val routed = TextAnalysis.langIdApply(d, langIdModelOf(d),
+        carry = Seq("text", "source"))
+        .select(col("id").as("doc_id"),
+          col("predicted_lang").as("lang"), col("text"), col("source"))
+      TextAnalysis.perplexityBuckets(routed,
+        refFilter = col("source").isin("src0", "src1", "src2", "src3", "src4"),
+        vocabSize = 24, headFrac = 0.3, keepFrac = 0.6).orderBy("id")
+    }, oracle = Some(perplexityOracleSql(
+      s"""$LangIdOracleCtes,
+tok AS (SELECT m.doc_id, p.vote AS lang, m.source,
+        string_split_regex(lower(trim(m.text)), '\\s+') AS t
+        FROM m JOIN pred p USING (doc_id))"""))),
+
+    // P123 — code-quality filters (Codex/StarCoder line-geometry
+    // screen): max/mean line length, alphanumeric density, and
+    // generation-marker scan over line-structured docs, exact integers
+    // only (div, basis points). The oracle REBUILDS the line-shaped
+    // fixture and recomputes every metric with SQL built-ins — a line
+    // split slip, a div slip, or a threshold slip changes rows.
+    QueryKey("p123_code_quality", Prepared, (s, dir) =>
+      TextAnalysis.codeQuality(codeDocs(docs(s, dir))).orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+w AS (SELECT doc_id, list_filter(
+        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
+      FROM documents),
+b AS (SELECT doc_id,
+        (CASE WHEN doc_id % 11 = 0
+          THEN '// Auto-Generated by graftgen' || chr(10) ELSE '' END)
+        || array_to_string(
+             [array_to_string(toks[k*7+1 : k*7+7], ' ')
+              for k in range(0, CAST(ceil(len(toks)/7.0) AS BIGINT))],
+             chr(10))
+        || (CASE WHEN doc_id % 9 = 0
+          THEN chr(10) || repeat('x', 1200) ELSE '' END) AS text
+      FROM w),
+m AS (SELECT doc_id AS id,
+        len(string_split(text, chr(10)))::BIGINT AS n_lines,
+        list_max(list_transform(string_split(text, chr(10)),
+          x -> length(x)))::BIGINT AS max_line_len,
+        length(text)::BIGINT AS n_chars,
+        length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))::BIGINT
+          AS n_alnum,
+        (lower(text) LIKE '%auto-generated%'
+          OR lower(text) LIKE '%autogenerated%'
+          OR lower(text) LIKE '%generated by%') AS autogen
+      FROM b),
+f AS (SELECT id, n_lines, max_line_len,
+        (n_chars - (n_lines - 1)) * 1000 // n_lines AS mean_line_milli,
+        n_alnum * 10000 // n_chars AS alnum_bp, autogen
+      FROM m)
+SELECT *, (max_line_len <= 1000 AND mean_line_milli <= 100000
+  AND alnum_bp >= 2500 AND NOT autogen) AS keep
+FROM f ORDER BY id""")),
+
+    // P19+++++, key p70_quality_classifier — the DCLM/FineWeb-Edu
+    // supervised classifier step: a 20% seed slice (doc_id % 5 == 0) is
+    // LABELED by the Gopher verdict (the expensive judgment being
+    // distilled), a binary NB over hashed bigrams trains on it in one
+    // pass, and the FULL corpus is threshold-filtered by the trained
+    // model — train/apply generalization across different frames, which
+    // is what separates this from p63's self-referential resampling.
+    // Rebuild: trains the classifier by a collect.
+    QueryKey("p70_quality_classifier", Rebuild, (s, dir) => {
+      val seed = docs(s, dir).where(col("doc_id") % 5 === 0)
+      val labeled = TextAnalysis.gopherRules(seed, stopwords = Seq("the", "a"),
+        passthrough = Seq("text"))
+      val model = Corpus.classifierTrain(labeled, isPositive = col("passes"),
+        buckets = DsirBuckets)
+      Corpus.classifierFilter(docs(s, dir), model, threshold = 1.0)
+        .orderBy("id")
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 seed AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
 sb AS (SELECT doc_id, text, string_split_regex(lower(trim(text)), '\\s+') AS t,
         string_split(text, chr(10)) AS ls FROM seed),
@@ -723,164 +780,20 @@ sums AS (SELECT doc_id, count(*)::BIGINT AS n_grams,
   FROM jr GROUP BY doc_id)
 SELECT doc_id AS id, n_grams, round(s / n_grams::DOUBLE, 6) AS quality_score
 FROM sums WHERE s / n_grams::DOUBLE >= 1.0
-ORDER BY id""",
+ORDER BY id""")),
 
-    // p72 mirror notes: per-language add-one unigram probability
-    // p(w) = (c+1)/(T_l + v_l + 1) — pure rational IEEE arithmetic (no
-    // logs, the LM-ladder portability convention), summed in token order
-    // via list_reduce exactly like VocabScore's left fold; OOV adds the
-    // per-language constant 1/(T_l+v_l+1). The head/keep cutoffs are the
-    // rounded scores at rank ceil(frac*n) of the per-language descending
-    // order — ties share a bucket, so max(score) over cum>=k equals the
-    // rank-k score with any tie-break.
-    "p72_perplexity_buckets" -> PerplexityOracle,
-
-    "p65_tfidf" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-tok AS (SELECT doc_id AS id,
-    unnest(string_split_regex(lower(trim(text)), '\\s+')) AS term
-  FROM documents),
-tf AS (SELECT id, term, count(*)::BIGINT AS tf FROM tok
-       WHERE term <> '' GROUP BY id, term),
-df AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY term),
-nn AS (SELECT count(*)::BIGINT AS n FROM documents),
-sc AS (SELECT tf.id, tf.term, tf.tf, df.df,
-    tf.tf::DOUBLE * (nn.n::DOUBLE / df.df::DOUBLE) AS raw
-  FROM tf JOIN df USING (term) CROSS JOIN nn),
-r AS (SELECT id, term, tf, df, raw,
-    row_number() OVER (PARTITION BY id ORDER BY raw DESC, term ASC)::BIGINT
-      AS rank
-  FROM sc)
-SELECT id, rank, term, tf, df, round(raw, 6) AS tfidf
-FROM r WHERE rank <= 5 ORDER BY id, rank""",
-
-    "p08_langid" -> LangIdOracle,
-
-    "p09_quality" -> {
-      val stop = graft.functions.TextFunctions.DefaultStopwords("en")
-        .map("'" + _ + "'").mkString(", ")
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-base AS (
-  SELECT doc_id AS id, length(text)::BIGINT AS n_chars,
-         string_split_regex(lower(trim(text)), '\\s+') AS t,
-         length(regexp_replace(lower(text), '[a-z0-9\\s]', '', 'g'))::BIGINT AS punct
-  FROM documents),
-m AS (
-  SELECT id, n_chars, len(t)::BIGINT AS n_tokens,
-    list_reduce([0]::BIGINT[] || list_transform(t, x -> length(x)::BIGINT),
-      (a,b) -> a+b)::DOUBLE / len(t)::DOUBLE AS mean_len,
-    punct::DOUBLE / n_chars::DOUBLE AS punct_ratio,
-    len(list_filter(t, x -> list_contains([$stop], x)))::DOUBLE / len(t)::DOUBLE
-      AS stop_ratio
-  FROM base)
-SELECT id, n_chars, n_tokens,
-  round(mean_len, 6) AS mean_token_len,
-  round(punct_ratio, 6) AS punct_ratio,
-  round(stop_ratio, 6) AS stopword_ratio,
-  round(GREATEST(0.0, 1.0 - abs(mean_len - 5.0) / 10.0 - punct_ratio * 2.0
-    + stop_ratio * 0.5), 6) AS quality_score
-FROM m ORDER BY id"""
-    },
-
-    "p10_tokens" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id AS id,
-  len(string_split_regex(lower(trim(text)), '\\s+'))::BIGINT AS ws_tokens,
-  len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\\s]'))::BIGINT AS bpe_tokens
-FROM documents ORDER BY id""",
-
-    "p11_fingerprint" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-toks AS (SELECT doc_id, text, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents)
-SELECT doc_id AS id,
-  list_reduce([0]::BIGINT[] ||
-    list_transform(t, x -> ('0x' || substring(md5(x),1,8))::BIGINT),
-    (a,b) -> (a*131 + b % $HashMod) % $HashMod) AS fingerprint,
-  md5(text) AS content_hash
-FROM toks ORDER BY id""",
-
-    // p96: the expected folded string in closed form — curly quotes to
-    // ASCII, NBSP to space, em-dash to '-', ZWSP gone, curly
-    // apostrophe to ', ellipsis to three dots.
-    "p96_unicode_fold" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id AS id,
-  '"' || text || '" -it''s fine...' AS text_clean,
-  len('"' || text || '" -it''s fine...')::BIGINT AS n_chars_clean
-FROM documents ORDER BY id""",
-
-    // p97: the 5 expected sentences per doc in closed form — one per
-    // rule branch of the planted paragraph.
-    "p97_sentences" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-t AS (SELECT doc_id, coalesce(array_to_string(list_slice(
-        string_split_regex(lower(trim(text)), '\\s+'), 1, 2), ' '), '') AS seg
-      FROM documents),
-s AS (
-  SELECT doc_id, 0 AS sent_idx,
-         'Intro about ' || seg || '.' AS sentence FROM t
-  UNION ALL SELECT doc_id, 1, 'Then came 3.14 pies!' FROM t
-  UNION ALL SELECT doc_id, 2, 'Was it real?' FROM t
-  UNION ALL SELECT doc_id, 3, 'Yes. the trap stays.' FROM t
-  UNION ALL SELECT doc_id, 4, 'Tail' FROM t)
-SELECT doc_id AS id, sent_idx::BIGINT AS sent_idx, sentence
-FROM s ORDER BY id, sent_idx""",
-
-    // p117: the whole train/apply chain re-derived from scratch (see
-    // LangIdOracleCtes — counts, HUGEINT cross-product vote argmax,
-    // doc plurality, alphabetical ties).
-    "p117_langid_trained" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-$LangIdOracleCtes
-SELECT doc_id AS id, vote AS predicted_lang, gold AS gold_lang,
-  vote = gold AS correct, n_grams, nv AS top_votes
-FROM pred ORDER BY id""",
-
-    // p120: p117's predicted lang routed into p72's CCNet chain — the
-    // tok CTE swaps the gold label for the HUGEINT-derived vote and
-    // the marked text, then every perplexity line is shared verbatim
-    // with p72's oracle (perplexityOracleSql).
-    "p120_langid_perplexity" -> perplexityOracleSql(
-      s"""$LangIdOracleCtes,
-tok AS (SELECT m.doc_id, p.vote AS lang, m.source,
-        string_split_regex(lower(trim(m.text)), '\\s+') AS t
-        FROM m JOIN pred p USING (doc_id))"""),
-
-    // p123: the fixture text rebuilt closed-form, every metric
-    // recomputed with SQL built-ins (list_max over the line split,
-    // regexp char strip, // integral division).
-    "p123_code_quality" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-w AS (SELECT doc_id, list_filter(
-        string_split_regex(text, '\\s+'), x -> x <> '') AS toks
-      FROM documents),
-b AS (SELECT doc_id,
-        (CASE WHEN doc_id % 11 = 0
-          THEN '// Auto-Generated by graftgen' || chr(10) ELSE '' END)
-        || array_to_string(
-             [array_to_string(toks[k*7+1 : k*7+7], ' ')
-              for k in range(0, CAST(ceil(len(toks)/7.0) AS BIGINT))],
-             chr(10))
-        || (CASE WHEN doc_id % 9 = 0
-          THEN chr(10) || repeat('x', 1200) ELSE '' END) AS text
-      FROM w),
-m AS (SELECT doc_id AS id,
-        len(string_split(text, chr(10)))::BIGINT AS n_lines,
-        list_max(list_transform(string_split(text, chr(10)),
-          x -> length(x)))::BIGINT AS max_line_len,
-        length(text)::BIGINT AS n_chars,
-        length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))::BIGINT
-          AS n_alnum,
-        (lower(text) LIKE '%auto-generated%'
-          OR lower(text) LIKE '%autogenerated%'
-          OR lower(text) LIKE '%generated by%') AS autogen
-      FROM b),
-f AS (SELECT id, n_lines, max_line_len,
-        (n_chars - (n_lines - 1)) * 1000 // n_lines AS mean_line_milli,
-        n_alnum * 10000 // n_chars AS alnum_bp, autogen
-      FROM m)
-SELECT *, (max_line_len <= 1000 AND mean_line_milli <= 100000
-  AND alnum_bp >= 2500 AND NOT autogen) AS keep
-FROM f ORDER BY id"""
+    // P31+++++, key p72_perplexity_buckets — CCNet-style per-language
+    // perplexity bucketing (Wenzek et al. 2020): per-language unigram
+    // models trained on a trusted reference slice (sources src0-src4,
+    // the "Wikipedia" proxy), every doc scored with its own language's
+    // model, each language split head/middle/tail at the 30%/60%
+    // quantiles of the rounded score, keep = not tail. Small per-lang
+    // vocab (24) exercises OOV like the rest of the LM ladder.
+    // Rebuild: trains the perplexity model by collects.
+    QueryKey("p72_perplexity_buckets", Rebuild, (s, dir) =>
+      TextAnalysis.perplexityBuckets(docs(s, dir),
+        refFilter = col("source").isin("src0", "src1", "src2", "src3", "src4"),
+        vocabSize = 24, headFrac = 0.3, keepFrac = 0.6).orderBy("id"),
+      oracle = Some(PerplexityOracle))
   )
 }

@@ -4,13 +4,14 @@ package keys
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
+import QueryKey.{Prepared, Rebuild}
 import PipelineFixtures._
 import OracleCtes._
 
 /** Web keys: URLs, HTML extraction, robots, sitemaps and the link graph. */
 object WebKeys {
 
-  private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[QueryKey] = Seq(
     // P143 — meta-robots governance (the PAGE's own directives —
     // complements robots.txt p101/p132; the r16 verdict's #6 ask):
     // noindex (or none) drops the page from the corpus composition;
@@ -21,7 +22,7 @@ object WebKeys {
     // re-derives both populations from the planted variant formula
     // (mixed case, unquoted values, flipped attribute order, a decoy
     // description meta, rel before AND after href all load-bearing).
-    "p143_meta_robots" -> ((s, dir) => {
+    QueryKey("p143_meta_robots", Prepared, (s, dir) => {
       val pages = robotsPages(docs(s, dir))
       val kept = pages
         .where(!Html.metaRobots(col("html")).getField("noindex"))
@@ -31,7 +32,20 @@ object WebKeys {
       val edges = Html.governedLinkGraph(pages)
         .select(lit("edge").as("kind"), col("src_url"), col("dst_url"))
       kept.unionAll(edges).orderBy("kind", "src_url", "dst_url")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+d AS (SELECT doc_id, doc_id % 9 AS m, doc_id % 4 AS q,
+  'gov-' || (doc_id % 50) || '.example.com/p/' || doc_id AS src,
+  'ext-' || (doc_id % 20) || '.example.org/t/' || doc_id AS a1,
+  'gov-' || (doc_id % 50) || '.example.com/ok/' || (doc_id * 2) AS a3
+ FROM documents),
+rows_ AS (
+  SELECT 'page' AS kind, src AS src_url, '' AS dst_url FROM d
+    WHERE m NOT IN (0, 2, 3)
+  UNION ALL
+  SELECT 'edge', src, a1 FROM d WHERE m NOT IN (1, 2, 3)
+  UNION ALL
+  SELECT 'edge', src, a3 FROM d WHERE m NOT IN (1, 2, 3) AND q <> 0)
+SELECT * FROM rows_ ORDER BY kind, src_url, dst_url""")),
 
     // P145 — X-Robots-Tag governance (the HTTP-header twin of p143's
     // meta tag, carried through the REAL front door): per-doc header
@@ -41,7 +55,8 @@ object WebKeys {
     // header capture, casing, the agent-scoped form, and the
     // decoy-header exactness are all end-to-end checked against the
     // planted formula.
-    "p145_xrobots" -> ((s, dir) => {
+    // Rebuild: exports the WARC fixture it reads.
+    QueryKey("p145_xrobots", Rebuild, (s, dir) => {
       import graft.sources.WarcSource
       val out = s"/root/repo/target/warc-xrobots-${dir.replaceAll("[^0-9.]", "")}"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
@@ -64,7 +79,11 @@ object WebKeys {
         d.getField("nofollow").as("nofollow"))
         .withColumn("kept", !col("noindex"))
         .orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+d AS (SELECT doc_id, doc_id % 6 AS m FROM documents)
+SELECT doc_id AS id, m IN (0, 2, 3) AS noindex, m IN (1, 2) AS nofollow,
+  m NOT IN (0, 2, 3) AS kept
+FROM d ORDER BY id""")),
 
     // P78 — URL canonicalization + URL-level dedup (C4/CCNet/RefinedWeb
     // step 1: collapse scheme/www/default-port/tracking-param/fragment/
@@ -74,8 +93,9 @@ object WebKeys {
     // trailing slash+utm+shuffled params; scheme-less+:443+fragment);
     // the canonicalizer must collapse all three to the formula
     // canonical or rows/hash diverge. One scan + one hash aggregation.
-    "p78_url_dedup" -> ((s, dir) =>
-      UrlOps.urlDedup(messyUrls(docs(s, dir))).orderBy("canonical_url")),
+    QueryKey("p78_url_dedup", Prepared, (s, dir) =>
+      UrlOps.urlDedup(messyUrls(docs(s, dir))).orderBy("canonical_url"),
+      oracle = Some(UrlDedupOracle)),
 
     // P79 — domain balancing (RefinedWeb/FineWeb anti-dominance: cap
     // every registered domain at k docs, best-quality first). Fixture:
@@ -84,7 +104,7 @@ object WebKeys {
     // cut must ignore subdomains and keep 3 labels under co.uk or the
     // grouping (and the kept set) diverges. WindowGroupLimit prunes to
     // k rows per partition BEFORE the shuffle.
-    "p79_domain_cap" -> ((s, dir) => {
+    QueryKey("p79_domain_cap", Prepared, (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("n_chars"))
         .withColumn("h", pmod(col("doc_id"), lit(40)))
       val tld = when(pmod(col("h"), lit(4)) === 0, lit(".co.uk"))
@@ -98,7 +118,14 @@ object WebKeys {
       UrlOps.domainCap(d.withColumn("url", url), k = 5)
         .withColumn("domain_rank", col("domain_rank").cast("long"))
         .orderBy("domain", "domain_rank")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+d AS (SELECT doc_id, n_chars, doc_id % 40 AS h FROM documents),
+e AS (SELECT doc_id, n_chars, 'example-' || h ||
+        CASE WHEN h % 4 = 0 THEN '.co.uk' ELSE '.com' END AS domain FROM d),
+r AS (SELECT *, row_number() OVER (PARTITION BY domain
+        ORDER BY n_chars DESC, doc_id ASC) AS domain_rank FROM e)
+SELECT doc_id, domain, domain_rank FROM r WHERE domain_rank <= 5
+ORDER BY domain, domain_rank""")),
 
     // P90 — URL-level decontamination (the Pile/FineWeb benchmark
     // guard BEFORE the n-gram checks): the eval set records every %17
@@ -106,7 +133,8 @@ object WebKeys {
     // params + gclid), so only canonical matching — never string
     // matching — removes the right docs; a hit kills the page's whole
     // 3-capture group.
-    "p90_url_decontamination" -> ((s, dir) => {
+    // Rebuild: reads the corpus schema twice (docs and benchmark), two jobs.
+    QueryKey("p90_url_decontamination", Rebuild, (s, dir) => {
       val train = messyUrls(docs(s, dir))
       val bench = docs(s, dir).where(pmod(col("doc_id"), lit(17)) === 0)
         .withColumn("grp", expr("doc_id DIV 3"))
@@ -117,7 +145,14 @@ object WebKeys {
         .select(col("doc_id"),
           UrlOps.canonicalizeUrl(col("url")).as("canonical_url"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+bad AS (SELECT DISTINCT doc_id // 3 AS grp FROM documents WHERE doc_id % 17 = 0)
+SELECT doc_id,
+  'example-' || ((doc_id // 3) % 50) || '.com/Pg/' || (doc_id // 3)
+    || '?a=1&b=2' AS canonical_url
+FROM documents
+WHERE doc_id // 3 NOT IN (SELECT grp FROM bad)
+ORDER BY doc_id""")),
 
     // P92 — HTML-to-text extraction (the step that PRODUCES the WET
     // form p91 consumes): script/style/comment excision, block-tag
@@ -126,40 +161,111 @@ object WebKeys {
     // The oracle derives the expected text from the fixture RULE
     // (title + h1 + normalized doc text + entity paragraph + link
     // anchors), not by mirroring the chain — an independent check.
-    "p92_html_extract" -> ((s, dir) =>
+    QueryKey("p92_html_extract", Prepared, (s, dir) =>
       htmlPages(docs(s, dir))
         .select(col("doc_id"), Html.htmlToText(col("html")).as("text_extracted"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+n AS (SELECT doc_id,
+  array_to_string(list_filter(list_transform(
+    string_split(regexp_replace(text, '[ \\t\\r\\x{00a0}]+', ' ', 'g'), chr(10)),
+    x -> trim(x)), x -> x <> ''), chr(10)) AS norm FROM documents)
+SELECT doc_id,
+  'Doc ' || doc_id || chr(10) || 'Doc ' || doc_id || chr(10) || norm ||
+  chr(10) || 'Visit & enjoy <deals> now.' || chr(10) || 'next rel u s'
+  AS text_extracted
+FROM n ORDER BY doc_id""")),
 
     // P95 — page-level link graph: hrefs extracted from raw HTML
     // (both quote styles), root-relative links resolved against the
     // page host, everything canonicalized, one distinct edge list —
     // the web-graph construction behind PageRank-style quality
     // signals. The oracle enumerates the planted edges by formula.
-    "p95_link_graph" -> ((s, dir) =>
+    QueryKey("p95_link_graph", Prepared, (s, dir) =>
       Html.linkGraph(htmlPages(docs(s, dir)))
-        .orderBy("src_url", "dst_url")),
+        .orderBy("src_url", "dst_url"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+d AS (SELECT doc_id,
+  'example-' || (doc_id % 50) || '.com/Pg/' || doc_id || '?a=1&b=2' AS src_url,
+  CASE WHEN doc_id % 10 = 7 THEN 'base-' || (doc_id % 50) || '.example.org'
+       ELSE 'example-' || (doc_id % 50) || '.com' END AS bhost,
+  CASE WHEN doc_id % 10 = 7 THEN 'base-' || (doc_id % 50) || '.example.org/Dir'
+       ELSE 'example-' || (doc_id % 50) || '.com/Pg' END AS bdir
+ FROM documents),
+e AS (
+ SELECT src_url, 'example-' || ((doc_id + 1) % 50) || '.com/Pg/'
+          || (doc_id + 1) || '?a=1&b=2' AS dst_url FROM d
+ UNION
+ SELECT src_url, bhost || '/Pg/' || (doc_id * 7 + 3) || '?a=1&b=2' FROM d
+ UNION
+ SELECT src_url, bhost || '/Pg/' || (doc_id * 3 + 1) || '?a=1&b=2' FROM d
+ UNION
+ SELECT src_url, bdir || '/Sub/' || doc_id || '?a=1&b=2' FROM d)
+SELECT src_url, dst_url FROM e ORDER BY src_url, dst_url""")),
 
     // P98 — registered-domain web-graph signals over the p95 edges:
     // crawled page count, out-degree, in-degree per domain — the
     // aggregate behind link-based quality priors. The oracle counts
     // pages and planted links per domain straight from the formula.
-    "p98_domain_signals" -> ((s, dir) =>
+    QueryKey("p98_domain_signals", Prepared, (s, dir) =>
       Html.domainSignals(Html.linkGraph(htmlPages(docs(s, dir))))
-        .orderBy("domain")),
+        .orderBy("domain"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+o AS (SELECT 'example-' || (doc_id % 50) || '.com' AS domain,
+        count(*) AS n_pages, 4 * count(*) AS out_degree
+      FROM documents GROUP BY 1),
+i AS (SELECT domain, count(*) AS in_degree FROM (
+    SELECT 'example-' || ((doc_id + 1) % 50) || '.com' AS domain
+    FROM documents
+    UNION ALL
+    -- root-relative (x2) + path-relative links: the page's own domain,
+    -- except base pages whose subdomain registers under example.org
+    SELECT CASE WHEN doc_id % 10 = 7 THEN 'example.org'
+                ELSE 'example-' || (doc_id % 50) || '.com' END
+    FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k))
+  GROUP BY domain)
+SELECT coalesce(o.domain, i.domain) AS domain,
+  coalesce(n_pages, 0)::BIGINT AS n_pages,
+  coalesce(out_degree, 0)::BIGINT AS out_degree,
+  coalesce(in_degree, 0)::BIGINT AS in_degree
+FROM o FULL JOIN i ON o.domain = i.domain
+ORDER BY domain""")),
 
     // P100 — PageRank over a domain graph in DETERMINISTIC fixed-point
     // integer arithmetic (floats sum in shuffle order and never
     // hash-match): the fixture's quadratic-residue edges give genuinely
     // non-uniform ranks; the oracle unrolls the same 10 iterations as
     // SQL CTE stages with identical floor-division order.
-    "p100_pagerank" -> ((s, dir) =>
+    // Rebuild: iterates ten checkpointed PageRank steps.
+    QueryKey("p100_pagerank", Rebuild, (s, dir) =>
       Html.pageRank(
         docs(s, dir).select(pmod(col("doc_id"), lit(50)).as("src"),
           pmod(col("doc_id") * col("doc_id") + 1, lit(50)).as("dst"))
           .where(col("src") =!= col("dst")).distinct(),
         iterations = 10)
-        .orderBy("node")),
+        .orderBy("node"),
+      oracle = Some {
+      val stages = (1 to 10).map { k =>
+        s"""pr$k AS (SELECT nodes.node,
+    (SELECT tele FROM t) + (85 * coalesce(cin.c, 0)) // 100 AS r
+  FROM nodes LEFT JOIN (
+    SELECT e.dst AS node, sum(p.r // deg.outdeg)::BIGINT AS c
+    FROM e JOIN pr${k - 1} p ON e.src = p.node
+           JOIN deg ON deg.src = e.src
+    GROUP BY e.dst) cin ON nodes.node = cin.node)"""
+      }.mkString(",\n")
+      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+e AS (SELECT DISTINCT doc_id % 50 AS src, (doc_id * doc_id + 1) % 50 AS dst
+      FROM documents WHERE doc_id % 50 <> (doc_id * doc_id + 1) % 50),
+nodes AS (SELECT DISTINCT node FROM (
+  SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
+t AS (SELECT (1000000000000 * 15 // 100) // count(*) AS tele FROM nodes),
+pr0 AS (SELECT node, 1000000000000 // (SELECT count(*) FROM nodes) AS r
+        FROM nodes),
+$stages
+SELECT node, r AS rank FROM pr10 ORDER BY node"""
+    }),
 
     // P101 — robots-aware filtering as crawler "GraftBot/1.0" under
     // RFC 9309: group selection FIRST (§2.2.1 — most-specific
@@ -182,7 +288,7 @@ object WebKeys {
     //     does NOT match and must be ignored in favor of `*`.
     // An empty Disallow and a never-matching /private rule are
     // planted to be ignored throughout.
-    "p101_robots_filter" -> ((s, dir) => {
+    QueryKey("p101_robots_filter", Prepared, (s, dir) => {
       val d = pageUrls(docs(s, dir))
       val robots = d.select(pmod(col("doc_id"), lit(50)).as("h")).distinct()
         .select(concat(lit("example-"), col("h"), lit(".com")).as("host"),
@@ -207,7 +313,24 @@ object WebKeys {
         .select(col("doc_id"),
           UrlOps.canonicalizeUrl(col("url")).as("canonical_url"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+d AS (SELECT doc_id, doc_id % 50 AS h,
+        doc_id::VARCHAR AS ds, (doc_id % 50)::VARCHAR AS hs FROM documents),
+v AS (SELECT doc_id, h,
+   CASE WHEN h % 4 = 0 THEN
+     CASE WHEN starts_with(ds, '2') THEN 1 ELSE 0 END
+   WHEN h % 4 = 2 THEN 1
+   ELSE CASE WHEN
+     greatest(CASE WHEN h % 5 = 2 THEN 3 ELSE -1 END,
+              CASE WHEN h % 3 <> 1 AND starts_with(ds, hs)
+                THEN 4 + len(hs) ELSE -1 END)
+     <= greatest(3, CASE WHEN h % 5 = 2 AND starts_with(ds, '1')
+                  THEN 5 ELSE -1 END)
+     THEN 1 ELSE 0 END END AS kept
+ FROM d)
+SELECT doc_id,
+  'example-' || h || '.com/Pg/' || doc_id || '?a=1&b=2' AS canonical_url
+FROM v WHERE kept = 1 ORDER BY doc_id""")),
 
     // P80 — domain-aware boilerplate removal (jusText/trafilatura step:
     // lines in >= 1/2 of a domain's docs are template, excised from ALL
@@ -217,7 +340,7 @@ object WebKeys {
     // line on (doc_id DIV 40)%2 (ratio ~1/2 -> the exact-integer
     // boundary, decided per-domain by cnt*2 >= ndocs). Body lines are
     // content and survive.
-    "p80_boilerplate" -> ((s, dir) => {
+    QueryKey("p80_boilerplate", Prepared, (s, dir) => {
       val domain = concat(lit("example-"), pmod(col("doc_id"), lit(40)))
       val planted = docs(s, dir).select(col("doc_id"), col("text"))
         .withColumn("domain", domain)
@@ -232,7 +355,33 @@ object WebKeys {
       TextAnalysis.boilerplateRemove(planted, "domain")
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+d AS (SELECT doc_id, 'example-' || (doc_id % 40) AS domain,
+        '(c) example-' || (doc_id % 40) || ' rights' || chr(10) || text ||
+        CASE WHEN doc_id % 3 = 0
+          THEN chr(10) || 'PROMO example-' || (doc_id % 40) ELSE '' END ||
+        CASE WHEN (doc_id // 40) % 2 = 0
+          THEN chr(10) || 'NOTICE example-' || (doc_id % 40) ELSE '' END ||
+        chr(10) || 'subscribe example-' || (doc_id % 40) AS text
+      FROM documents),
+nd AS (SELECT domain, count(*) AS ndocs FROM d GROUP BY domain),
+lx AS (SELECT doc_id, domain, string_split(text, chr(10)) AS ls FROM d),
+l AS (SELECT doc_id, domain, z[2]::BIGINT AS ord, z[1] AS line
+      FROM (SELECT doc_id, domain, unnest(list_zip(ls, range(1, len(ls) + 1))) AS z
+            FROM lx)),
+u AS (SELECT DISTINCT doc_id, domain, line FROM l),
+c AS (SELECT domain, line, count(*) AS cnt FROM u GROUP BY domain, line),
+b AS (SELECT c.domain, c.line FROM c JOIN nd ON c.domain = nd.domain
+      WHERE 2 * c.cnt >= nd.ndocs AND nd.ndocs >= 3),
+k AS (SELECT l.* FROM l LEFT JOIN b
+        ON l.domain = b.domain AND l.line = b.line
+      WHERE b.line IS NULL)
+SELECT d.doc_id,
+  (SELECT count(*) FROM l WHERE l.doc_id = d.doc_id)
+    - count(k.line) AS n_removed,
+  coalesce(string_agg(k.line, chr(10) ORDER BY k.ord), '') AS text_clean
+FROM d LEFT JOIN k ON d.doc_id = k.doc_id
+GROUP BY d.doc_id ORDER BY d.doc_id""")),
 
     // P114 — table extraction from raw HTML (tables are prime
     // pretraining content and the first casualty of text-only
@@ -241,16 +390,30 @@ object WebKeys {
     // shuffle. The oracle REGENERATES every cell from the fixture
     // formula (never parses HTML), so a regex slip, an index slip, or
     // a decode miss all change rows.
-    "p114_html_tables" -> ((s, dir) =>
+    QueryKey("p114_html_tables", Prepared, (s, dir) =>
       Html.extractTables(tablePages(docs(s, dir)))
-        .orderBy("id", "table_idx", "row_idx")),
+        .orderBy("id", "table_idx", "row_idx"),
+      oracle = Some(s"""WITH $HtmlTablesOracleCtes
+SELECT * FROM u ORDER BY id, table_idx, row_idx""")),
 
     // P116 — markdown rendering of extracted tables (how table
     // content actually enters a training corpus): p114's rows
     // re-shaped to GFM pipe-table lines in the same single pass.
-    "p116_table_markdown" -> ((s, dir) =>
+    QueryKey("p116_table_markdown", Prepared, (s, dir) =>
       Html.tablesToMarkdown(tablePages(docs(s, dir)))
-        .orderBy("id", "table_idx", "line_idx")),
+        .orderBy("id", "table_idx", "line_idx"),
+      oracle = Some(s"""WITH $HtmlTablesOracleCtes,
+l AS (SELECT id, table_idx, 0::BIGINT AS line_idx,
+        '| ' || replace(cells, '|', ' | ') || ' |' AS line
+      FROM u WHERE row_idx = 0
+      UNION ALL
+      SELECT id, table_idx, 1::BIGINT, '|' || repeat(' --- |', n_cells::INT)
+      FROM u WHERE row_idx = 0
+      UNION ALL
+      SELECT id, table_idx, row_idx + 1,
+        '| ' || replace(cells, '|', ' | ') || ' |'
+      FROM u WHERE row_idx > 0)
+SELECT * FROM l ORDER BY id, table_idx, line_idx""")),
 
     // P122 — sitemap parsing (the discovery half of crawl governance;
     // robots p101 is the permission half): urlset AND sitemapindex
@@ -259,9 +422,10 @@ object WebKeys {
     // without touching XML — a block-split slip, a tag-match slip, an
     // optional-field null/empty slip, or an entity-decode slip all
     // change rows.
-    "p122_sitemaps" -> ((s, dir) =>
+    QueryKey("p122_sitemaps", Prepared, (s, dir) =>
       UrlOps.parseSitemaps(sitemapDocs(docs(s, dir)), siteCol = "site_id")
-        .orderBy("site", "entry_idx")),
+        .orderBy("site", "entry_idx"),
+      oracle = Some(SitemapsOracle)),
 
     // P169 — canonical-link + OpenGraph extraction feeding
     // canonical-aware URL dedup (the key URL dedup SHOULD group on:
@@ -275,7 +439,7 @@ object WebKeys {
     // canonical-less lanes falling back to the page URL; og:title
     // alternates property=/name= spellings, og:description rides
     // thirds. Oracle re-derives every field + the window verdict.
-    "p169_canonical_meta" -> ((s, dir) => {
+    QueryKey("p169_canonical_meta", Prepared, (s, dir) => {
       val id = col("doc_id")
       val h = pmod(id, lit(50))
       val own = concat(lit("https://Site-"), h, lit(".example.com/p/"),
@@ -304,7 +468,24 @@ object WebKeys {
         .withColumn("is_kept", col("id") ===
           min(col("id")).over(Window.partitionBy(col("effective_key"))))
         .orderBy("id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+e AS (SELECT doc_id AS id,
+  'site-' || (doc_id % 50) || '.example.com/p/' || doc_id
+    || '?a=1&b=2' AS page_url,
+  CASE WHEN doc_id % 4 = 0
+         THEN 'canon.example.org/c/' || (doc_id - doc_id % 12)
+       WHEN doc_id % 4 = 2
+         THEN 'site-' || (doc_id % 50) || '.example.com/self/' || doc_id
+       ELSE NULL END AS canonical_url,
+  'T ' || doc_id AS og_title,
+  CASE WHEN doc_id % 3 = 0 THEN 'D ' || (doc_id % 7)
+       ELSE NULL END AS og_description
+ FROM documents),
+k AS (SELECT *, coalesce(canonical_url, page_url) AS effective_key FROM e)
+SELECT id, page_url, canonical_url, og_title, og_description,
+  effective_key,
+  id = min(id) OVER (PARTITION BY effective_key) AS is_kept
+FROM k ORDER BY id""")),
 
     // P158 — HTML character-reference decoding (real pages carry
     // numeric `&#233;`/`&#xE9;` and named `&eacute;`/`&mdash;`
@@ -315,7 +496,7 @@ object WebKeys {
     // intact, and never rescans output (`&amp;lt;` stays `&lt;`).
     // The oracle builds the decoded paragraph closed-form in SQL —
     // DuckDB never sees an entity.
-    "p158_html_entities" -> ((s, dir) => {
+    QueryKey("p158_html_entities", Prepared, (s, dir) => {
       val html = concat(lit("<html><body><p>"), escHtml(col("text")),
         lit("</p><p>caf&eacute; &#233; &#xE9; na&iuml;ve &mdash; " +
           "&ldquo;q&rdquo; &hellip; 3&nbsp;&times;&nbsp;4 &euro;9 " +
@@ -324,7 +505,15 @@ object WebKeys {
         .select(col("doc_id"),
           Html.htmlToText(col("html")).as("text_extracted"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+n AS (SELECT doc_id,
+  array_to_string(list_filter(list_transform(
+    string_split(regexp_replace(text, '[ \\t\\r\\x{00a0}]+', ' ', 'g'), chr(10)),
+    x -> trim(x)), x -> x <> ''), chr(10)) AS norm FROM documents)
+SELECT doc_id, norm || chr(10) ||
+  'café é é naïve — “q” … 3 × 4 €9 &lt; &bogus; &#xD800; R&D'
+  AS text_extracted
+FROM n ORDER BY doc_id""")),
 
     // P157 — robots.txt WILDCARD rules (RFC 9309 REQUIRES `*` and the
     // end-anchor `$` in path patterns — `Disallow: /*.pdf$` is
@@ -335,7 +524,7 @@ object WebKeys {
     // /p/{id}.html (kept: the anchor must not over-match), and
     // /mid/{id}/deep/... (dropped by the mid-pattern wildcard
     // /mid/*/deep). Oracle re-derives every verdict closed-form.
-    "p157_robots_wildcards" -> ((s, dir) => {
+    QueryKey("p157_robots_wildcards", Prepared, (s, dir) => {
       val d = docs(s, dir).withColumn("url",
         concat(lit("https://w-"), pmod(col("doc_id"), lit(50)),
           lit(".com"),
@@ -353,7 +542,18 @@ object WebKeys {
         .select(col("doc_id"),
           UrlOps.canonicalizeUrl(col("url")).as("canonical_url"))
         .orderBy("doc_id")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
+SELECT doc_id,
+  'w-' || (doc_id % 50) || '.com' ||
+  CASE doc_id % 3
+    WHEN 0 THEN '/p/' || doc_id || '.pdf'
+    WHEN 1 THEN '/p/' || doc_id || '.html'
+    ELSE '/mid/' || doc_id || '/deep/page'
+  END AS canonical_url
+FROM documents
+WHERE doc_id % 3 = 1
+   OR (doc_id % 3 = 0 AND CAST(doc_id AS VARCHAR) LIKE '2%')
+ORDER BY doc_id""")),
 
     // P125 — crawl-frontier scheduling (discovery → fetch plan): p122's
     // parsed urlset entries become per-host politeness queues ordered
@@ -362,11 +562,30 @@ object WebKeys {
     // milli-units (500 default where the sitemap gives none); index
     // rows are pointers, not fetchables, and are filtered. The oracle
     // re-derives entries AND the window from scratch.
-    "p125_frontier" -> ((s, dir) =>
+    QueryKey("p125_frontier", Prepared, (s, dir) =>
       UrlOps.frontierSchedule(
         UrlOps.parseSitemaps(sitemapDocs(docs(s, dir)), siteCol = "site_id"),
         perRound = 2)
-        .orderBy("host", "fetch_round", "loc")),
+        .orderBy("host", "fetch_round", "loc"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+u AS (SELECT doc_id, t.j FROM documents,
+        unnest(generate_series(0, doc_id % 5)) AS t(j)
+      WHERE doc_id % 7 <> 0),
+e AS (SELECT 'site' || (doc_id % 40) || '.example.com' AS host,
+        'https://site' || (doc_id % 40) || '.example.com/page/' || doc_id
+          || '/' || j || '?a=1&b=2' AS loc,
+        CASE WHEN j % 2 = 0
+          THEN '2024-01-' || lpad(((doc_id + j) % 28 + 1)::VARCHAR, 2, '0')
+          END AS lastmod,
+        (CASE WHEN j % 2 = 1 THEN ((doc_id + j) % 10) * 100
+          ELSE 500 END)::BIGINT AS priority_milli
+      FROM u),
+r AS (SELECT host, loc, priority_milli,
+        row_number() OVER (PARTITION BY host ORDER BY priority_milli DESC,
+          lastmod DESC NULLS LAST, loc) AS rn
+      FROM e)
+SELECT host, loc, priority_milli, (rn + 1) // 2 AS fetch_round
+FROM r ORDER BY host, fetch_round, loc""")),
 
     // P132 — robots-driven sitemap discovery (closes the crawl-
     // governance loop: permission p101 → DISCOVERY ← frontier p125):
@@ -379,9 +598,28 @@ object WebKeys {
     // from the robots arithmetic alone (doc_id % 3 gate), so a
     // directive-parse slip, a join slip, or a discovery leak all
     // change rows.
-    "p132_sitemap_discovery" -> ((s, dir) =>
+    QueryKey("p132_sitemap_discovery", Prepared, (s, dir) =>
       discoveredFrontier(docs(s, dir))._2
-        .orderBy("host", "fetch_round", "loc")),
+        .orderBy("host", "fetch_round", "loc"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+u AS (SELECT doc_id, t.j FROM documents,
+        unnest(generate_series(0, doc_id % 5)) AS t(j)
+      WHERE doc_id % 7 <> 0 AND doc_id % 3 <> 1),
+e AS (SELECT 'site' || (doc_id % 40) || '.example.com' AS host,
+        'https://site' || (doc_id % 40) || '.example.com/page/' || doc_id
+          || '/' || j || '?a=1&b=2' AS loc,
+        CASE WHEN j % 2 = 0
+          THEN '2024-01-' || lpad(((doc_id + j) % 28 + 1)::VARCHAR, 2, '0')
+          END AS lastmod,
+        (CASE WHEN j % 2 = 1 THEN ((doc_id + j) % 10) * 100
+          ELSE 500 END)::BIGINT AS priority_milli
+      FROM u),
+r AS (SELECT host, loc, priority_milli,
+        row_number() OVER (PARTITION BY host ORDER BY priority_milli DESC,
+          lastmod DESC NULLS LAST, loc) AS rn
+      FROM e)
+SELECT host, loc, priority_milli, (rn + 1) // 2 AS fetch_round
+FROM r ORDER BY host, fetch_round, loc""")),
 
     // P138 — sitemapindex RECURSION (the pointer-chase between p122's
     // two halves: an index document's entries are not fetchables, they
@@ -394,7 +632,7 @@ object WebKeys {
     // and every child entry closed-form: a kind-routing slip, a
     // pointer-extraction slip, a dedup miss (duplicate child rows), or
     // a child-parse slip all change rows.
-    "p138_sitemap_children" -> ((s, dir) => {
+    QueryKey("p138_sitemap_children", Prepared, (s, dir) => {
       val d = docs(s, dir)
       val pointers = UrlOps.parseSitemaps(sitemapDocs(d), siteCol = "site_id")
         .where(col("kind") === "sitemapindex")
@@ -403,7 +641,17 @@ object WebKeys {
         .join(pointers, Seq("url"), "left_semi")
       UrlOps.parseSitemaps(fetched, siteCol = "url")
         .orderBy("site", "entry_idx")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+hj AS (SELECT DISTINCT (doc_id % 40) AS h, t.j
+       FROM documents, unnest(generate_series(0, doc_id % 3)) AS t(j)
+       WHERE doc_id % 7 = 0)
+SELECT 'https://site' || h || '.example.com/sitemap-' || j || '.xml' AS site,
+  'urlset' AS kind, u.k::BIGINT AS entry_idx,
+  'https://site' || h || '.example.com/child/' || j || '/' || u.k AS loc,
+  NULL::VARCHAR AS lastmod, NULL::VARCHAR AS changefreq,
+  CASE WHEN u.k = 1 THEN '0.' || ((h + j) % 10) END AS priority
+FROM hj, unnest(generate_series(0, 1)) AS u(k)
+ORDER BY site, entry_idx""")),
 
     // P136 — frontier PACING by Crawl-delay (the politeness budget in
     // wall-clock terms: a host's queue position becomes a fetch TIME):
@@ -414,7 +662,7 @@ object WebKeys {
     // robots-bounded delay table onto the frontier; the oracle
     // re-derives delays from the host arithmetic (h%5+1) and the
     // pacing closed-form.
-    "p136_frontier_pacing" -> ((s, dir) => {
+    QueryKey("p136_frontier_pacing", Prepared, (s, dir) => {
       val (robots, frontier) = discoveredFrontier(docs(s, dir))
       val delays = UrlOps.robotsCrawlDelays(robots)
       frontier.join(broadcast(delays), Seq("host"), "left")
@@ -422,7 +670,27 @@ object WebKeys {
           ((col("fetch_round") - 1) *
             coalesce(col("crawl_delay_sec"), lit(1L))).as("fetch_at_sec"))
         .orderBy("host", "fetch_at_sec", "loc")
-    }),
+    }, oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+u AS (SELECT doc_id, t.j FROM documents,
+        unnest(generate_series(0, doc_id % 5)) AS t(j)
+      WHERE doc_id % 7 <> 0 AND doc_id % 3 <> 1),
+e AS (SELECT (doc_id % 40) AS hn,
+        'site' || (doc_id % 40) || '.example.com' AS host,
+        'https://site' || (doc_id % 40) || '.example.com/page/' || doc_id
+          || '/' || j || '?a=1&b=2' AS loc,
+        CASE WHEN j % 2 = 0
+          THEN '2024-01-' || lpad(((doc_id + j) % 28 + 1)::VARCHAR, 2, '0')
+          END AS lastmod,
+        (CASE WHEN j % 2 = 1 THEN ((doc_id + j) % 10) * 100
+          ELSE 500 END)::BIGINT AS priority_milli
+      FROM u),
+r AS (SELECT hn, host, loc, priority_milli,
+        row_number() OVER (PARTITION BY host ORDER BY priority_milli DESC,
+          lastmod DESC NULLS LAST, loc) AS rn
+      FROM e)
+SELECT host, loc, (rn + 1) // 2 AS fetch_round,
+  (((rn + 1) // 2 - 1) * (hn % 5 + 1))::BIGINT AS fetch_at_sec
+FROM r ORDER BY host, fetch_at_sec, loc""")),
 
     // P137 — anchor-text signals (what the web says ABOUT a page — the
     // off-page quality/topic label search corpora and quality
@@ -432,14 +700,36 @@ object WebKeys {
     // enumerates all four planted anchor families ('next'/'rel'/'u'/
     // 's') with p95's dst formulas and recomputes counts, distinct
     // sources, and the sorted anchor-set join.
-    "p137_anchor_text" -> ((s, dir) =>
+    QueryKey("p137_anchor_text", Prepared, (s, dir) =>
       Html.anchorTexts(htmlPages(docs(s, dir)))
         .groupBy("dst_url")
         .agg(count(lit(1)).as("n_refs"),
           countDistinct(col("src_url")).as("n_pages"),
           array_join(array_sort(collect_set(col("anchor"))), "|")
             .as("anchors"))
-        .orderBy("dst_url")),
+        .orderBy("dst_url"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+d AS (SELECT doc_id,
+  'example-' || (doc_id % 50) || '.com/Pg/' || doc_id || '?a=1&b=2' AS src_url,
+  CASE WHEN doc_id % 10 = 7 THEN 'base-' || (doc_id % 50) || '.example.org'
+       ELSE 'example-' || (doc_id % 50) || '.com' END AS bhost,
+  CASE WHEN doc_id % 10 = 7 THEN 'base-' || (doc_id % 50) || '.example.org/Dir'
+       ELSE 'example-' || (doc_id % 50) || '.com/Pg' END AS bdir
+ FROM documents),
+e AS (
+ SELECT src_url, 'example-' || ((doc_id + 1) % 50) || '.com/Pg/'
+          || (doc_id + 1) || '?a=1&b=2' AS dst_url, 'next' AS anchor FROM d
+ UNION ALL
+ SELECT src_url, bhost || '/Pg/' || (doc_id * 7 + 3) || '?a=1&b=2', 'rel' FROM d
+ UNION ALL
+ SELECT src_url, bhost || '/Pg/' || (doc_id * 3 + 1) || '?a=1&b=2', 'u' FROM d
+ UNION ALL
+ SELECT src_url, bdir || '/Sub/' || doc_id || '?a=1&b=2', 's' FROM d)
+SELECT dst_url, count(*)::BIGINT AS n_refs,
+  count(DISTINCT src_url)::BIGINT AS n_pages,
+  array_to_string(list_sort(list_distinct(list(anchor))), '|') AS anchors
+FROM e WHERE dst_url <> src_url
+GROUP BY dst_url ORDER BY dst_url""")),
 
     // P127 — main-content extraction by block scoring (the jusText/
     // trafilatura boilerplate-vs-content step), THREE exact-integer
@@ -450,328 +740,11 @@ object WebKeys {
     // regenerates kept blocks closed-form (never parsing HTML) and
     // recomputes ALL THREE screens, so segmentation, cleaning, and
     // each exact-integer rule are byte-checked.
-    "p127_main_content" -> ((s, dir) =>
+    QueryKey("p127_main_content", Prepared, (s, dir) =>
       Html.mainContent(contentPages(docs(s, dir)),
         stopwords = MainContentStopwords, minStopwordBp = 500)
-        .orderBy("id"))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    // p145: verdicts by the planted-header formula — noindex on m ∈
-    // {0,2,3} (2 is `none`, 3 the agent-scoped form read globally),
-    // nofollow on m ∈ {1,2}; the m=4 decoy header name never counts.
-    "p145_xrobots" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-d AS (SELECT doc_id, doc_id % 6 AS m FROM documents)
-SELECT doc_id AS id, m IN (0, 2, 3) AS noindex, m IN (1, 2) AS nofollow,
-  m NOT IN (0, 2, 3) AS kept
-FROM d ORDER BY id""",
-
-    // p143: both populations by the planted-variant formula — noindex
-    // on m ∈ {0,2,3} (2 is `none`; 4 is the decoy and does NOT count),
-    // page-level nofollow on m ∈ {1,2,3} killing all edges, the
-    // rel=nofollow anchor never edging, a3 edging only off %4≠0.
-    "p143_meta_robots" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-d AS (SELECT doc_id, doc_id % 9 AS m, doc_id % 4 AS q,
-  'gov-' || (doc_id % 50) || '.example.com/p/' || doc_id AS src,
-  'ext-' || (doc_id % 20) || '.example.org/t/' || doc_id AS a1,
-  'gov-' || (doc_id % 50) || '.example.com/ok/' || (doc_id * 2) AS a3
- FROM documents),
-rows_ AS (
-  SELECT 'page' AS kind, src AS src_url, '' AS dst_url FROM d
-    WHERE m NOT IN (0, 2, 3)
-  UNION ALL
-  SELECT 'edge', src, a1 FROM d WHERE m NOT IN (1, 2, 3)
-  UNION ALL
-  SELECT 'edge', src, a3 FROM d WHERE m NOT IN (1, 2, 3) AND q <> 0)
-SELECT * FROM rows_ ORDER BY kind, src_url, dst_url""",
-
-    // p78: ground truth from the fixture formula — three messy URL
-    // variants of group g all canonicalize to
-    // example-{g%50}.com/Pg/{g}?a=1&b=2; the kept capture is the
-    // longest (ties -> smallest doc_id). Any canonicalizer slip
-    // (unstripped utm/port/www/slash, unsorted params) changes the
-    // grouping and the rows diverge.
-    "p78_url_dedup" -> UrlDedupOracle,
-
-    // p79: ground truth from the fixture formula — subdomains never
-    // split a domain, co.uk keeps three labels; rank = quality desc,
-    // ties to smallest id; cap k=5.
-    "p79_domain_cap" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-d AS (SELECT doc_id, n_chars, doc_id % 40 AS h FROM documents),
-e AS (SELECT doc_id, n_chars, 'example-' || h ||
-        CASE WHEN h % 4 = 0 THEN '.co.uk' ELSE '.com' END AS domain FROM d),
-r AS (SELECT *, row_number() OVER (PARTITION BY domain
-        ORDER BY n_chars DESC, doc_id ASC) AS domain_rank FROM e)
-SELECT doc_id, domain, domain_rank FROM r WHERE domain_rank <= 5
-ORDER BY domain, domain_rank""",
-
-    // p90: contaminated groups from the fixture rule; survivors keep
-    // their formula canonical.
-    "p90_url_decontamination" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-bad AS (SELECT DISTINCT doc_id // 3 AS grp FROM documents WHERE doc_id % 17 = 0)
-SELECT doc_id,
-  'example-' || ((doc_id // 3) % 50) || '.com/Pg/' || (doc_id // 3)
-    || '?a=1&b=2' AS canonical_url
-FROM documents
-WHERE doc_id // 3 NOT IN (SELECT grp FROM bad)
-ORDER BY doc_id""",
-
-    // p92: expected text from the fixture RULE, not the regex chain —
-    // title line + h1 line + whitespace-normalized doc text + decoded
-    // entity paragraph + link anchor text. A chain bug (script leak,
-    // entity order, line handling) diverges from this independently
-    // derived string.
-    "p92_html_extract" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-n AS (SELECT doc_id,
-  array_to_string(list_filter(list_transform(
-    string_split(regexp_replace(text, '[ \\t\\r\\x{00a0}]+', ' ', 'g'), chr(10)),
-    x -> trim(x)), x -> x <> ''), chr(10)) AS norm FROM documents)
-SELECT doc_id,
-  'Doc ' || doc_id || chr(10) || 'Doc ' || doc_id || chr(10) || norm ||
-  chr(10) || 'Visit & enjoy <deals> now.' || chr(10) || 'next rel u s'
-  AS text_extracted
-FROM n ORDER BY doc_id""",
-
-    // p95: the planted edges by formula — absolute messy link to the
-    // next doc's page; root-relative (quoted AND unquoted) plus
-    // path-relative links resolving against the page's own host/dir,
-    // except on %10==7 pages whose <base href> re-roots both relative
-    // forms onto base-{h}.example.org. A resolution, base, or
-    // canonicalization slip changes rows.
-    "p95_link_graph" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-d AS (SELECT doc_id,
-  'example-' || (doc_id % 50) || '.com/Pg/' || doc_id || '?a=1&b=2' AS src_url,
-  CASE WHEN doc_id % 10 = 7 THEN 'base-' || (doc_id % 50) || '.example.org'
-       ELSE 'example-' || (doc_id % 50) || '.com' END AS bhost,
-  CASE WHEN doc_id % 10 = 7 THEN 'base-' || (doc_id % 50) || '.example.org/Dir'
-       ELSE 'example-' || (doc_id % 50) || '.com/Pg' END AS bdir
- FROM documents),
-e AS (
- SELECT src_url, 'example-' || ((doc_id + 1) % 50) || '.com/Pg/'
-          || (doc_id + 1) || '?a=1&b=2' AS dst_url FROM d
- UNION
- SELECT src_url, bhost || '/Pg/' || (doc_id * 7 + 3) || '?a=1&b=2' FROM d
- UNION
- SELECT src_url, bhost || '/Pg/' || (doc_id * 3 + 1) || '?a=1&b=2' FROM d
- UNION
- SELECT src_url, bdir || '/Sub/' || doc_id || '?a=1&b=2' FROM d)
-SELECT src_url, dst_url FROM e ORDER BY src_url, dst_url""",
-
-    // p100: the SAME 10 fixed-point iterations unrolled as CTE stages —
-    // identical floor-division order (r DIV outdeg per edge, sum,
-    // *85 DIV 100, + teleport), so Spark and DuckDB agree to the last
-    // integer unit. Positive-only values make DuckDB's floor-div and
-    // Spark's truncating DIV identical.
-    "p100_pagerank" -> {
-      val stages = (1 to 10).map { k =>
-        s"""pr$k AS (SELECT nodes.node,
-    (SELECT tele FROM t) + (85 * coalesce(cin.c, 0)) // 100 AS r
-  FROM nodes LEFT JOIN (
-    SELECT e.dst AS node, sum(p.r // deg.outdeg)::BIGINT AS c
-    FROM e JOIN pr${k - 1} p ON e.src = p.node
-           JOIN deg ON deg.src = e.src
-    GROUP BY e.dst) cin ON nodes.node = cin.node)"""
-      }.mkString(",\n")
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-e AS (SELECT DISTINCT doc_id % 50 AS src, (doc_id * doc_id + 1) % 50 AS dst
-      FROM documents WHERE doc_id % 50 <> (doc_id * doc_id + 1) % 50),
-nodes AS (SELECT DISTINCT node FROM (
-  SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
-t AS (SELECT (1000000000000 * 15 // 100) // count(*) AS tele FROM nodes),
-pr0 AS (SELECT node, 1000000000000 // (SELECT count(*) FROM nodes) AS r
-        FROM nodes),
-$stages
-SELECT node, r AS rank FROM pr10 ORDER BY node"""
-    },
-
-    // p101: group choice + verdict re-derived in closed form. Group
-    // choice by host class: h%4==0 → the `graft` group binds (its
-    // token prefixes graftbot; `*` loses), kept iff decimal(id)
-    // starts with '2' (Allow /Pg/2 = 5 beats Disallow /Pg = 3);
-    // h%4==2 → `graftbot` (len 8) beats `graft` (len 5), its only
-    // rule /private never matches → all kept (the losing graft group
-    // said Disallow: / — selection is load-bearing); otherwise the
-    // `*` group binds (h%4==3's otherbot group must NOT match) with
-    // the r14 longest-match formula: best allow = max(/Pg = 3,
-    // carve-out /Pg/1 = 5 where it matches); best disallow =
-    // max(broad /Pg = 3 on h%5==2 hosts, /Pg/{h} = 4+|h| where the
-    // id string starts with h — id==h, but also 202 under h=2:
-    // prefix semantics are the point, stated honestly); kept iff
-    // best_d <= best_a (the equal-length tie falls to allow).
-    "p101_robots_filter" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-d AS (SELECT doc_id, doc_id % 50 AS h,
-        doc_id::VARCHAR AS ds, (doc_id % 50)::VARCHAR AS hs FROM documents),
-v AS (SELECT doc_id, h,
-   CASE WHEN h % 4 = 0 THEN
-     CASE WHEN starts_with(ds, '2') THEN 1 ELSE 0 END
-   WHEN h % 4 = 2 THEN 1
-   ELSE CASE WHEN
-     greatest(CASE WHEN h % 5 = 2 THEN 3 ELSE -1 END,
-              CASE WHEN h % 3 <> 1 AND starts_with(ds, hs)
-                THEN 4 + len(hs) ELSE -1 END)
-     <= greatest(3, CASE WHEN h % 5 = 2 AND starts_with(ds, '1')
-                  THEN 5 ELSE -1 END)
-     THEN 1 ELSE 0 END END AS kept
- FROM d)
-SELECT doc_id,
-  'example-' || h || '.com/Pg/' || doc_id || '?a=1&b=2' AS canonical_url
-FROM v WHERE kept = 1 ORDER BY doc_id""",
-
-    // p98: per-domain page and planted-link counts straight from the
-    // formula — every doc contributes 1 page, 2 out-edges, 1 in-edge
-    // to its own domain (the relative link) and 1 to doc_id+1's.
-    "p98_domain_signals" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-o AS (SELECT 'example-' || (doc_id % 50) || '.com' AS domain,
-        count(*) AS n_pages, 4 * count(*) AS out_degree
-      FROM documents GROUP BY 1),
-i AS (SELECT domain, count(*) AS in_degree FROM (
-    SELECT 'example-' || ((doc_id + 1) % 50) || '.com' AS domain
-    FROM documents
-    UNION ALL
-    -- root-relative (x2) + path-relative links: the page's own domain,
-    -- except base pages whose subdomain registers under example.org
-    SELECT CASE WHEN doc_id % 10 = 7 THEN 'example.org'
-                ELSE 'example-' || (doc_id % 50) || '.com' END
-    FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k))
-  GROUP BY domain)
-SELECT coalesce(o.domain, i.domain) AS domain,
-  coalesce(n_pages, 0)::BIGINT AS n_pages,
-  coalesce(out_degree, 0)::BIGINT AS out_degree,
-  coalesce(in_degree, 0)::BIGINT AS in_degree
-FROM o FULL JOIN i ON o.domain = i.domain
-ORDER BY domain""",
-
-    // p80: DuckDB recomputes the per-(domain, line) doc frequency and
-    // the exact-integer threshold from the same planted text, so a
-    // drifted count, a wrong boundary, or an order-scrambling rebuild
-    // all diverge.
-    "p80_boilerplate" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-d AS (SELECT doc_id, 'example-' || (doc_id % 40) AS domain,
-        '(c) example-' || (doc_id % 40) || ' rights' || chr(10) || text ||
-        CASE WHEN doc_id % 3 = 0
-          THEN chr(10) || 'PROMO example-' || (doc_id % 40) ELSE '' END ||
-        CASE WHEN (doc_id // 40) % 2 = 0
-          THEN chr(10) || 'NOTICE example-' || (doc_id % 40) ELSE '' END ||
-        chr(10) || 'subscribe example-' || (doc_id % 40) AS text
-      FROM documents),
-nd AS (SELECT domain, count(*) AS ndocs FROM d GROUP BY domain),
-lx AS (SELECT doc_id, domain, string_split(text, chr(10)) AS ls FROM d),
-l AS (SELECT doc_id, domain, z[2]::BIGINT AS ord, z[1] AS line
-      FROM (SELECT doc_id, domain, unnest(list_zip(ls, range(1, len(ls) + 1))) AS z
-            FROM lx)),
-u AS (SELECT DISTINCT doc_id, domain, line FROM l),
-c AS (SELECT domain, line, count(*) AS cnt FROM u GROUP BY domain, line),
-b AS (SELECT c.domain, c.line FROM c JOIN nd ON c.domain = nd.domain
-      WHERE 2 * c.cnt >= nd.ndocs AND nd.ndocs >= 3),
-k AS (SELECT l.* FROM l LEFT JOIN b
-        ON l.domain = b.domain AND l.line = b.line
-      WHERE b.line IS NULL)
-SELECT d.doc_id,
-  (SELECT count(*) FROM l WHERE l.doc_id = d.doc_id)
-    - count(k.line) AS n_removed,
-  coalesce(string_agg(k.line, chr(10) ORDER BY k.ord), '') AS text_clean
-FROM d LEFT JOIN k ON d.doc_id = k.doc_id
-GROUP BY d.doc_id ORDER BY d.doc_id""",
-
-    // p114: every cell regenerated from the fixture formula — row 0's
-    // bold wrap strips to nothing, cell (1,1)'s &amp;x decodes to &x;
-    // the second table exists only for %7 docs.
-    "p114_html_tables" -> s"""WITH $HtmlTablesOracleCtes
-SELECT * FROM u ORDER BY id, table_idx, row_idx""",
-
-    // p116: p114's regenerated rows re-shaped into GFM pipe-table
-    // lines — header, ----alignment line, data rows — by the same
-    // formula; a formatting or line-indexing slip changes rows.
-    "p116_table_markdown" -> s"""WITH $HtmlTablesOracleCtes,
-l AS (SELECT id, table_idx, 0::BIGINT AS line_idx,
-        '| ' || replace(cells, '|', ' | ') || ' |' AS line
-      FROM u WHERE row_idx = 0
-      UNION ALL
-      SELECT id, table_idx, 1::BIGINT, '|' || repeat(' --- |', n_cells::INT)
-      FROM u WHERE row_idx = 0
-      UNION ALL
-      SELECT id, table_idx, row_idx + 1,
-        '| ' || replace(cells, '|', ' | ') || ' |'
-      FROM u WHERE row_idx > 0)
-SELECT * FROM l ORDER BY id, table_idx, line_idx""",
-
-    // p169: fields + the dedup window verdict re-derived closed-form —
-    // a rel-token, attr-order, resolution, or first-wins slip diverges.
-    "p169_canonical_meta" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-e AS (SELECT doc_id AS id,
-  'site-' || (doc_id % 50) || '.example.com/p/' || doc_id
-    || '?a=1&b=2' AS page_url,
-  CASE WHEN doc_id % 4 = 0
-         THEN 'canon.example.org/c/' || (doc_id - doc_id % 12)
-       WHEN doc_id % 4 = 2
-         THEN 'site-' || (doc_id % 50) || '.example.com/self/' || doc_id
-       ELSE NULL END AS canonical_url,
-  'T ' || doc_id AS og_title,
-  CASE WHEN doc_id % 3 = 0 THEN 'D ' || (doc_id % 7)
-       ELSE NULL END AS og_description
- FROM documents),
-k AS (SELECT *, coalesce(canonical_url, page_url) AS effective_key FROM e)
-SELECT id, page_url, canonical_url, og_title, og_description,
-  effective_key,
-  id = min(id) OVER (PARTITION BY effective_key) AS is_kept
-FROM k ORDER BY id""",
-
-    // p158: the decoded paragraph built closed-form — numeric decimal
-    // + hex, Latin-1 and typographic names, nbsp-to-space
-    // normalization, the double-encoding pass-once rule, unknown-name
-    // and invalid-scalar pass-through all load-bearing in one string.
-    "p158_html_entities" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-n AS (SELECT doc_id,
-  array_to_string(list_filter(list_transform(
-    string_split(regexp_replace(text, '[ \\t\\r\\x{00a0}]+', ' ', 'g'), chr(10)),
-    x -> trim(x)), x -> x <> ''), chr(10)) AS norm FROM documents)
-SELECT doc_id, norm || chr(10) ||
-  'café é é naïve — “q” … 3 × 4 €9 &lt; &bogus; &#xD800; R&D'
-  AS text_extracted
-FROM n ORDER BY doc_id""",
-
-    // p157: every wildcard verdict re-derived closed-form — kept rows
-    // are the .html lane plus the .pdf lane's ids starting with '2'
-    // (the longer Allow pattern outranks the Disallow); the SQL never
-    // evaluates a pattern, so translation, anchoring, and
-    // pattern-length precedence must all be exact.
-    "p157_robots_wildcards" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet'))
-SELECT doc_id,
-  'w-' || (doc_id % 50) || '.com' ||
-  CASE doc_id % 3
-    WHEN 0 THEN '/p/' || doc_id || '.pdf'
-    WHEN 1 THEN '/p/' || doc_id || '.html'
-    ELSE '/mid/' || doc_id || '/deep/page'
-  END AS canonical_url
-FROM documents
-WHERE doc_id % 3 = 1
-   OR (doc_id % 3 = 0 AND CAST(doc_id AS VARCHAR) LIKE '2%')
-ORDER BY doc_id""",
-
-    // p122: both entry populations regenerated closed-form (urlset for
-    // doc_id%7!=0, index refs otherwise) with the loc's &amp; DECODED —
-    // the parser's output, never the XML. p126 is the STREAMING drain
-    // of the same parse and shares it verbatim (batch ≡ streaming).
-    "p122_sitemaps" -> SitemapsOracle,
-
-    // p127: kept blocks regenerated closed-form — content paras with
-    // cleaned length >= 25 plus the light-link para (its entity
-    // DECODED) — and block counts from the planting arithmetic.
-    "p127_main_content" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
+        .orderBy("id"),
+      oracle = Some(s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
 w AS (SELECT doc_id, list_filter(
         string_split_regex(text, '\\s+'), x -> x <> '') AS toks
       FROM documents),
@@ -795,127 +768,6 @@ x AS (SELECT doc_id,
 SELECT doc_id AS id, n_blocks::BIGINT AS n_blocks,
   len(kept)::BIGINT AS n_kept,
   coalesce(array_to_string(kept, chr(10)), '') AS main_text
-FROM x ORDER BY id""",
-
-    // p125: the urlset population from p122's oracle re-derived, then
-    // the politeness window recomputed — priority defaulting, null
-    // ordering, tie-breaks, and round folding all from scratch.
-    "p125_frontier" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-u AS (SELECT doc_id, t.j FROM documents,
-        unnest(generate_series(0, doc_id % 5)) AS t(j)
-      WHERE doc_id % 7 <> 0),
-e AS (SELECT 'site' || (doc_id % 40) || '.example.com' AS host,
-        'https://site' || (doc_id % 40) || '.example.com/page/' || doc_id
-          || '/' || j || '?a=1&b=2' AS loc,
-        CASE WHEN j % 2 = 0
-          THEN '2024-01-' || lpad(((doc_id + j) % 28 + 1)::VARCHAR, 2, '0')
-          END AS lastmod,
-        (CASE WHEN j % 2 = 1 THEN ((doc_id + j) % 10) * 100
-          ELSE 500 END)::BIGINT AS priority_milli
-      FROM u),
-r AS (SELECT host, loc, priority_milli,
-        row_number() OVER (PARTITION BY host ORDER BY priority_milli DESC,
-          lastmod DESC NULLS LAST, loc) AS rn
-      FROM e)
-SELECT host, loc, priority_milli, (rn + 1) // 2 AS fetch_round
-FROM r ORDER BY host, fetch_round, loc""",
-
-    // p132: p125's frontier closed form restricted to DISCOVERED
-    // sitemaps — the robots fixture advertises exactly the doc_id % 3
-    // <> 1 sitemap docs, and %7 == 0 docs are sitemapindex pointers
-    // (not fetchables). The SQL never parses robots or XML: if the
-    // directive extraction, the broadcast semi-join, or the discovery
-    // gate leaks even one undiscovered sitemap, rows diverge.
-    "p132_sitemap_discovery" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-u AS (SELECT doc_id, t.j FROM documents,
-        unnest(generate_series(0, doc_id % 5)) AS t(j)
-      WHERE doc_id % 7 <> 0 AND doc_id % 3 <> 1),
-e AS (SELECT 'site' || (doc_id % 40) || '.example.com' AS host,
-        'https://site' || (doc_id % 40) || '.example.com/page/' || doc_id
-          || '/' || j || '?a=1&b=2' AS loc,
-        CASE WHEN j % 2 = 0
-          THEN '2024-01-' || lpad(((doc_id + j) % 28 + 1)::VARCHAR, 2, '0')
-          END AS lastmod,
-        (CASE WHEN j % 2 = 1 THEN ((doc_id + j) % 10) * 100
-          ELSE 500 END)::BIGINT AS priority_milli
-      FROM u),
-r AS (SELECT host, loc, priority_milli,
-        row_number() OVER (PARTITION BY host ORDER BY priority_milli DESC,
-          lastmod DESC NULLS LAST, loc) AS rn
-      FROM e)
-SELECT host, loc, priority_milli, (rn + 1) // 2 AS fetch_round
-FROM r ORDER BY host, fetch_round, loc""",
-
-    // p138: the pointed-at (host, child) space re-derived from the
-    // index arithmetic (distinct over site_id%7==0 docs), then every
-    // child entry stated closed-form — unpointed children in the store
-    // must contribute nothing.
-    "p138_sitemap_children" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-hj AS (SELECT DISTINCT (doc_id % 40) AS h, t.j
-       FROM documents, unnest(generate_series(0, doc_id % 3)) AS t(j)
-       WHERE doc_id % 7 = 0)
-SELECT 'https://site' || h || '.example.com/sitemap-' || j || '.xml' AS site,
-  'urlset' AS kind, u.k::BIGINT AS entry_idx,
-  'https://site' || h || '.example.com/child/' || j || '/' || u.k AS loc,
-  NULL::VARCHAR AS lastmod, NULL::VARCHAR AS changefreq,
-  CASE WHEN u.k = 1 THEN '0.' || ((h + j) % 10) END AS priority
-FROM hj, unnest(generate_series(0, 1)) AS u(k)
-ORDER BY site, entry_idx""",
-
-    // p136: p132's discovered frontier with the pacing closed form —
-    // delay = host's Crawl-delay (h%5+1 by the robots arithmetic),
-    // fetch_at = (round-1) * delay.
-    "p136_frontier_pacing" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-u AS (SELECT doc_id, t.j FROM documents,
-        unnest(generate_series(0, doc_id % 5)) AS t(j)
-      WHERE doc_id % 7 <> 0 AND doc_id % 3 <> 1),
-e AS (SELECT (doc_id % 40) AS hn,
-        'site' || (doc_id % 40) || '.example.com' AS host,
-        'https://site' || (doc_id % 40) || '.example.com/page/' || doc_id
-          || '/' || j || '?a=1&b=2' AS loc,
-        CASE WHEN j % 2 = 0
-          THEN '2024-01-' || lpad(((doc_id + j) % 28 + 1)::VARCHAR, 2, '0')
-          END AS lastmod,
-        (CASE WHEN j % 2 = 1 THEN ((doc_id + j) % 10) * 100
-          ELSE 500 END)::BIGINT AS priority_milli
-      FROM u),
-r AS (SELECT hn, host, loc, priority_milli,
-        row_number() OVER (PARTITION BY host ORDER BY priority_milli DESC,
-          lastmod DESC NULLS LAST, loc) AS rn
-      FROM e)
-SELECT host, loc, (rn + 1) // 2 AS fetch_round,
-  (((rn + 1) // 2 - 1) * (hn % 5 + 1))::BIGINT AS fetch_at_sec
-FROM r ORDER BY host, fetch_at_sec, loc""",
-
-    // p137: all four planted anchor families over p95's dst formulas,
-    // occurrence counts + distinct sources + the sorted anchor-set
-    // join re-derived without parsing HTML.
-    "p137_anchor_text" ->
-      s"""WITH documents AS (SELECT * FROM read_parquet('$Sf/documents.parquet')),
-d AS (SELECT doc_id,
-  'example-' || (doc_id % 50) || '.com/Pg/' || doc_id || '?a=1&b=2' AS src_url,
-  CASE WHEN doc_id % 10 = 7 THEN 'base-' || (doc_id % 50) || '.example.org'
-       ELSE 'example-' || (doc_id % 50) || '.com' END AS bhost,
-  CASE WHEN doc_id % 10 = 7 THEN 'base-' || (doc_id % 50) || '.example.org/Dir'
-       ELSE 'example-' || (doc_id % 50) || '.com/Pg' END AS bdir
- FROM documents),
-e AS (
- SELECT src_url, 'example-' || ((doc_id + 1) % 50) || '.com/Pg/'
-          || (doc_id + 1) || '?a=1&b=2' AS dst_url, 'next' AS anchor FROM d
- UNION ALL
- SELECT src_url, bhost || '/Pg/' || (doc_id * 7 + 3) || '?a=1&b=2', 'rel' FROM d
- UNION ALL
- SELECT src_url, bhost || '/Pg/' || (doc_id * 3 + 1) || '?a=1&b=2', 'u' FROM d
- UNION ALL
- SELECT src_url, bdir || '/Sub/' || doc_id || '?a=1&b=2', 's' FROM d)
-SELECT dst_url, count(*)::BIGINT AS n_refs,
-  count(DISTINCT src_url)::BIGINT AS n_pages,
-  array_to_string(list_sort(list_distinct(list(anchor))), '|') AS anchors
-FROM e WHERE dst_url <> src_url
-GROUP BY dst_url ORDER BY dst_url"""
+FROM x ORDER BY id"""))
   )
 }

@@ -31,12 +31,16 @@ def merge(out, paths):
         k: min(r["queries_p50"][k] for r in runs if k in r.get("queries_p50", {}))
         for k in sorted(keys)
     }
-    merged["total_p50"] = sum(merged["queries_p50"].values())
+    # the board sums only keys every run timed: a key that failed in one
+    # run would otherwise enter the sum from the other runs alone
+    board = [k for k in keys if all(k in r.get("queries_p50", {}) for r in runs)]
+    merged["total_p50"] = sum(merged["queries_p50"][k] for k in board)
+    merged["board_keys"] = len(board)
     merged["merged_from"] = paths
     with open(out, "w") as f:
         json.dump(merged, f, indent=1, sort_keys=True)
-    print(f"merged {len(paths)} runs, {len(keys)} keys, "
-          f"board p50 sum {merged['total_p50']:.1f}s -> {out}")
+    print(f"merged {len(paths)} runs, {len(keys)} keys ({len(board)} in every "
+          f"run), board p50 sum {merged['total_p50']:.1f}s -> {out}")
 
 
 def cmp(before, after, thresh=0.10):
@@ -49,8 +53,16 @@ def cmp(before, after, thresh=0.10):
     better = [r for r in rows if r[3] < 1 - thresh]
     print(f"common {len(common)}  before sum {sum(b[k] for k in common):.1f}s"
           f"  after sum {sum(a[k] for k in common):.1f}s")
-    gm = math.exp(sum(math.log(r[3]) for r in rows if r[3] > 0) / len(rows))
-    print(f"geomean after/before: {gm:.3f} (speedup {1/gm:.3f}x)")
+    if not common:
+        print("no common keys: nothing to compare")
+        return
+    # a zero time on either side has no finite log ratio; leave it out of
+    # both the sum and the count
+    ratios = [r[3] for r in rows if 0 < r[3] < float("inf")]
+    if ratios:
+        gm = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
+        print(f"geomean after/before: {gm:.3f} (speedup {1/gm:.3f}x)"
+              f" over {len(ratios)} keys")
     med = sorted(r[3] for r in rows)[len(rows) // 2]
     print(f"median per-key ratio: {med:.3f} (window-control)")
     for title, rs in (("IMPROVED >", better), ("REGRESSED >", worse)):

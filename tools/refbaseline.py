@@ -313,7 +313,7 @@ def onehop(subj, obj, **edge):
 
 
 # TRAPI/batch equivalents of the repo's registered graph query keys —
-# mirror src/main/scala/graft/SparkEntry.scala registrations 1:1.
+# mirror src/main/scala/graft/keys/GraphKeys.scala records 1:1.
 TRAPI_QUERIES = {
     "g03_onehop_fwd": onehop(
         {"ids": cust(1, 2, 7, 13, 42, 99)}, {"categories": ["graft:Nation"]},
